@@ -12,6 +12,16 @@ with numpy boundary-splitting inside each Arrow batch and a carry buffer for
 groups that straddle batch boundaries.  One shuffle, same semantics,
 per-group cost ~µs.  At 10^12 turns the group count is O(10^9); this pattern
 is the difference between hours and weeks.
+
+The other fixed cost is per Python TASK, not per row or group: before each
+task PySpark's ``worker_util.setup_spark_files`` calls
+``importlib.invalidate_caches()``, which re-reads the central directory of
+every zip importer on the worker's path (``pyspark.zip`` about 14 times, the
+spark-core jar and py4j once each) — 0.16–0.24 CPU s per task on a 4-core
+host with Spark 4.1.2.  An identity ``mapInArrow`` over 8 partitions cost
+~2.2 CPU s there, against ~0.5 CPU s over one.  So the exchange feeding the
+kernels runs one wave of one task per core (:func:`_exchange_partitions`),
+not ``spark.sql.shuffle.partitions`` tasks.
 """
 
 from __future__ import annotations
@@ -21,6 +31,18 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+
+def _exchange_partitions(df: DataFrame) -> int:
+    """Partition count of the exchange feeding the grouped kernels:
+    ``min(spark.sql.shuffle.partitions, defaultParallelism)``.  Every
+    partition is one Python task paying the per-task floor in the module
+    docstring, so one task per core replaces ``shuffle.partitions`` tasks in
+    several waves; a session whose core count reaches ``shuffle.partitions``
+    keeps ``shuffle.partitions``."""
+    spark = df.sparkSession
+    n_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return min(n_max, spark.sparkContext.defaultParallelism)
 
 
 def prepare_sorted(
@@ -51,10 +73,9 @@ def prepare_sorted(
     # explicit partition count: a bare repartition(cols) lets AQE coalesce a
     # small shuffle down to one partition, serializing the Python kernel —
     # observed 7.6s → 1.5s on the model kernel at sf0.1 with this fix
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return (
         df.select(*cols)
-        .repartition(n_part, "key", "window_start")
+        .repartition(_exchange_partitions(df), "key", "window_start")
         .sortWithinPartitions("key", "window_start", "_ord", "_ts")
     )
 

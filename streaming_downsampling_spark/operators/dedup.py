@@ -104,10 +104,15 @@ def shingles(
     # gram and was measured 4x the cost of the whole word split; get()
     # returns NULL past the end (never an ANSI error) and concat_ws skips
     # NULLs, so short tails ("w1", "w1 w2") and the empty-text "" shingle
-    # come out byte-identical to the slice+join form.
+    # come out byte-identical to the slice+join form.  A NULL text has a NULL
+    # word array, where concat_ws would give "" and band the doc with
+    # empty-text docs: it keeps the slice+join form's NULL shingle.
     idx = F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0)))
     grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.get(w, i + j) for j in range(n)])
+        idx,
+        lambda i: F.when(w.isNull(), None).otherwise(
+            F.concat_ws(" ", *[F.get(w, i + j) for j in range(n)])
+        ),
     )
     return wide.select(
         id_col, F.explode(F.array_distinct(grams)).alias("shingle")
@@ -525,13 +530,15 @@ def connected_components(
     catalog run leaves the storage pool clean.  Convergence check = count
     of changed labels (no full-table sums that could overflow).
 
-    Output: (node, component) for every node appearing in ``pairs``.
+    Output: (node, component) for every node appearing in ``pairs``.  A
+    pair with a NULL id is no edge and contributes no node.
     """
     if max_iter < 1:
         # the for/else convergence check below reads `changed`, which is only
         # bound inside the loop — a zero-round call must fail loudly up front
         # (round-3 ADVICE: max_iter <= 0 used to surface as a NameError)
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    pairs = pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
     e = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(
@@ -700,11 +707,12 @@ def connected_components_star(
     # being filtered before it: the contract-parity selfies leg at the
     # bottom then reads the checkpointed blocks rather than re-running the
     # whole upstream candidate pipeline a second time (measured: a full
-    # extra LSH pass per call).
+    # extra LSH pass per call).  A pair with a NULL id is no edge: it is
+    # dropped first, because greatest/least skip NULLs and would turn it
+    # into a self-pair of its other node.
     all_edges = (
-        pairs.select(
-            F.greatest(id_a, id_b).alias("u"), F.least(id_a, id_b).alias("v")
-        )
+        pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
+        .select(F.greatest(id_a, id_b).alias("u"), F.least(id_a, id_b).alias("v"))
         .distinct()
         .localCheckpoint(eager=False)
     )

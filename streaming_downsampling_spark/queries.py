@@ -439,7 +439,7 @@ def _asof_hourly_enriched(spark, sf_dir):
     depends only on (event_type, hs).  The backward as-of therefore runs on
     the TINY hourly tier (left = each hour-with-data, right = the rollup
     rows) and the result broadcast-equi-joins back to the raw table on
-    (event_type, date_trunc hour).  Before: the raw table union-sorted into
+    (event_type, hour start).  Before: the raw table union-sorted into
     a window partitioned by event_type — 5 distinct keys, so the whole
     table's sort ran on <=5 tasks regardless of cluster size.  After: the
     only full-table shuffles are the hourly aggregation (map-side combined)
@@ -469,13 +469,18 @@ def _asof_hourly_enriched(spark, sf_dir):
         right_cols=["prev_hour_avg"],
         suffix="",
     )
-    left = ev.select("event_id", "event_type", "ts")
-    return left.join(
-        F.broadcast(matched),
-        (left["event_type"] == matched["event_type"])
-        & (F.date_trunc("hour", left["ts"]) == matched["hs"]),
-        "left",
-    ).drop(matched["event_type"])
+    # The join key is each event's tier hour start, from the F.window that
+    # built the tier: its buckets align to the epoch, while date_trunc('hour')
+    # truncates to session-zone hours and, under a fractional-offset zone
+    # (Asia/Kolkata), meets none of them.  A window expression also filters
+    # out NULL-ts rows, which this left join must keep, so the window reads a
+    # non-NULL stand-in (of ts's own type, TIMESTAMP or TIMESTAMP_NTZ) and
+    # the key is NULL where ts is.
+    ts = F.col("ts")
+    stand_in = F.coalesce(ts, F.lit("1970-01-01").cast(ev.schema["ts"].dataType))
+    hour_start = F.when(ts.isNotNull(), F.window(stand_in, "1 hour")["start"])
+    left = ev.select("event_id", "event_type", "ts", hour_start.alias("hs"))
+    return left.join(F.broadcast(matched), ["event_type", "hs"], "left")
 
 
 def q_asof_enrich(spark, sf_dir):

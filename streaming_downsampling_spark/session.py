@@ -3,6 +3,10 @@
 Local-mode settings mirror what we'd set on a real cluster: AQE on (skew-join
 split + partition coalescing), Arrow on for every pandas-UDF exchange, and
 shuffle partitions sized to the core count rather than the 200 default.
+
+``spark.sql.shuffle.partitions`` no longer sets the parallelism of the grouped
+Python kernels: their exchange (``operators._groupmap.prepare_sorted``) runs
+one task per core, with ``shuffle.partitions`` only as a ceiling.
 """
 
 from __future__ import annotations

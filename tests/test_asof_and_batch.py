@@ -180,3 +180,50 @@ def test_checksum_negative_timestamps_matches_python_int():
         bits = int(np.array(v, dtype=np.float64).view(np.uint64))
         expected = (expected + (int(t) * 1000003 + bits) % p) % p
     assert _checksum(ts, vals) == expected
+
+
+def test_asof_enrich_same_rows_under_non_utc_session(spark, tmp_path):
+    """The enrichment joins back on the tier's epoch-aligned hour start, so a
+    fractional-offset session zone (UTC+5:30) must not move any match, for
+    TIMESTAMP and TIMESTAMP_NTZ events alike, and an event with a NULL ts
+    stays in the left join with NULL enrichment."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streaming_downsampling_spark.queries import QUERIES
+
+    rng = np.random.default_rng(5)
+    n = 400
+    ts = np.sort(rng.integers(0, 3 * 86400, n)) * 10**6
+
+    def rows(sf_dir: str, zone: str) -> list:
+        old = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        try:
+            # collected datetimes do not depend on the session zone
+            out = QUERIES["asof_enrich"](spark, sf_dir)
+            return sorted(tuple(r) for r in out.collect())
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", old)
+
+    for tz in ("UTC", None):
+        sf_dir = tmp_path / f"tz_{tz}"
+        sf_dir.mkdir()
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array(np.arange(n + 1), pa.int64()),
+                    "ts": pa.array(ts.tolist() + [None], pa.timestamp("us", tz=tz)),
+                    "user_id": pa.array(rng.integers(0, 9, n + 1), pa.int64()),
+                    "event_type": pa.array(np.array(["a", "b"])[rng.integers(0, 2, n + 1)]),
+                    "value": pa.array(np.round(rng.normal(50, 10, n + 1), 2)),
+                    "props": pa.array(["{}"] * (n + 1)),
+                }
+            ),
+            str(sf_dir / "events.parquet"),
+        )
+        utc = rows(str(sf_dir), "UTC")
+        assert len(utc) == n + 1
+        assert sum(r[2] is not None for r in utc) > n // 2
+        assert utc[-1][0] == n and utc[-1][2] is None
+        assert rows(str(sf_dir), "Asia/Kolkata") == utc, tz

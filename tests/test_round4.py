@@ -166,7 +166,9 @@ def test_model_path_spreads_single_skewed_conversation(spark):
     half the shuffle partitions, because the model/Gorilla grouping key is
     (conv_id, window) — the window bucket is the built-in salt.  Asserted on
     the actual prepared exchange feeding the kernels (mapInPandas preserves
-    these partitions, so the kernel parallelism equals this spread)."""
+    these partitions, so the kernel parallelism equals this spread).  The
+    bound is taken against the exchange's own partition count, which
+    prepare_sorted sizes to the input."""
     from streaming_downsampling_spark.operators._groupmap import prepare_sorted
 
     n_days = 64
@@ -187,7 +189,7 @@ def test_model_path_spreads_single_skewed_conversation(spark):
     )
     df = big.unionByName(rest)
     prepared = prepare_sorted(df, "1 day", "conv_id", "ts", "value", "turn_idx")
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = prepared.rdd.getNumPartitions()
     spread_parts = (
         prepared.withColumn("pid", F.spark_partition_id())
         .filter(F.col("key") == "big")
