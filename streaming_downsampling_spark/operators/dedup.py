@@ -16,6 +16,8 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructField, StructType
 
 from ._pairs import in_bucket_pairs
 from ._spread import spread
@@ -626,12 +628,15 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
 
     spark = edges.sparkSession
     dtype = dict(edges.dtypes)["u"]
-    schema = f"node {dtype}, component {dtype}"
     pdf = edges.toPandas()
     if not len(pdf):
         # empty candidate graph (all-unique corpus): explicit schema —
-        # pandas inference cannot type an empty frame
-        return spark.createDataFrame([], schema=schema)
+        # pandas inference cannot type an empty frame — on an empty Arrow
+        # table, which plans as a LocalTableScan (a list would need a
+        # Python task per slice)
+        id_type = edges.schema["u"].dataType
+        schema = StructType([StructField("node", id_type), StructField("component", id_type)])
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
     u = pdf["u"].to_numpy(dtype=np.int64)
     v = pdf["v"].to_numpy(dtype=np.int64)
     nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)

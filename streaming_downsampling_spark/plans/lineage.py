@@ -13,7 +13,9 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -50,6 +52,16 @@ METRICS_SCHEMA = StructType(
 
 def new_job_id() -> str:
     return uuid.uuid4().hex[:12]
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """``rows`` as a DataFrame built from a typed Arrow table, which plans as
+    a ``LocalTableScan``, where a list of tuples would become a Python RDD
+    whose every slice pays the per-task cost described in the
+    ``operators/_groupmap.py`` module docstring."""
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array(c, f.type) for c, f in zip(zip(*rows), arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
 
 
 class LineageLog:
@@ -91,10 +103,8 @@ class LineageLog:
 
     def flush(self, spark: SparkSession) -> None:
         if self._lineage:
-            df = spark.createDataFrame(self._lineage, LINEAGE_SCHEMA)
-            self.wh.append("lineage", df)
+            self.wh.append("lineage", _local_frame(spark, self._lineage, LINEAGE_SCHEMA))
             self._lineage = []
         if self._metrics:
-            df = spark.createDataFrame(self._metrics, METRICS_SCHEMA)
-            self.wh.append("metrics", df)
+            self.wh.append("metrics", _local_frame(spark, self._metrics, METRICS_SCHEMA))
             self._metrics = []

@@ -9,7 +9,9 @@ thin, swappable layer (SURVEY.md §7.2 M0 fallback):
   (parquet files); a snapshot is a *manifest* mapping partition key → the
   list of data dirs that hold that partition's current rows,
 * ``metadata.json`` is swapped atomically (write-temp + ``os.replace``) and
-  carries the snapshot lineage (id, parent, operation, row count, manifest),
+  carries the snapshot lineage (id, parent, operation, row count, manifest);
+  the row count (``rows``) is what the operation wrote, summed from the
+  footers of the parquet files it just wrote — no read-back job,
 * readers always resolve the *current* snapshot → readers never see partial
   writes (the Iceberg atomic-commit property),
 * ``append`` commits ONLY the new batch's files — O(batch) I/O, the old
@@ -33,9 +35,21 @@ import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 UNPARTITIONED = "*"
+
+
+def _parquet_rows(path: str) -> int:
+    """Rows in the parquet files directly under ``path``, summed from their
+    footers — no Spark job.  Skips what Spark's file index skips: names
+    starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc`` checksums)."""
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
 
 
 def _anti_join_null_safe(old: DataFrame, batch_keys: DataFrame, on: list[str]) -> DataFrame:
@@ -153,7 +167,7 @@ class Warehouse:
     def _write_dir(self, table: str, name: str, df: DataFrame) -> int:
         out = self._data_dir(table, name)
         df.write.mode("overwrite").parquet(out)
-        return self.spark.read.parquet(out).count()
+        return _parquet_rows(out)
 
     def _write_partitioned(
         self, table: str, snap: int, df: DataFrame, partition_by: str
@@ -175,6 +189,7 @@ class Warehouse:
             "overwrite"
         ).partitionBy("__part").parquet(out)
         parts = {}
+        rows = 0
         for d in sorted(os.listdir(out)):
             if not d.startswith("__part="):
                 continue
@@ -182,12 +197,9 @@ class Warehouse:
             if v == "__HIVE_DEFAULT_PARTITION__":
                 v = "None"
             parts[v] = [f"{base}/{d}"]
-        # one read-back of the whole batch dir for the committed row count
-        rows = (
-            self.spark.read.parquet(out).count()
-            if parts
-            else 0
-        )
+            # committed row count from the files just written, not a
+            # read-back job over the batch dir
+            rows += _parquet_rows(os.path.join(out, d))
         return parts, rows
 
     def overwrite(
@@ -281,28 +293,31 @@ class Warehouse:
         # manifest key, skip the anti-join for that partition, and commit
         # duplicate keys (round-4 ADVICE finding, same failure class).
         df = df.persist()
-        touched = {
-            "None" if r[0] is None or r[0] == "" else r[0]
-            for r in df.select(
-                F.col(partition_by).cast("string")
-            ).distinct().collect()
-        }
-        old_dirs = [
-            self._data_dir(table, d)
-            for p, ds in parts.items()
-            if p in touched
-            for d in ds
-        ]
-        merged = df
-        if old_dirs:
-            on = list(dict.fromkeys([*keys, partition_by]))
-            old = self.spark.read.option("mergeSchema", "true").parquet(*old_dirs)
-            keep = _anti_join_null_safe(old, df.select(*on).distinct(), on)
-            # allowMissingColumns: a batch carrying a NEW column (or missing
-            # a legacy one) merges cleanly — the Iceberg add-column path
-            merged = keep.unionByName(df, allowMissingColumns=True)
-        new_parts, rows = self._write_partitioned(table, snap, merged, partition_by)
-        df.unpersist()
+        try:
+            touched = {
+                "None" if r[0] is None or r[0] == "" else r[0]
+                for r in df.select(
+                    F.col(partition_by).cast("string")
+                ).distinct().collect()
+            }
+            old_dirs = [
+                self._data_dir(table, d)
+                for p, ds in parts.items()
+                if p in touched
+                for d in ds
+            ]
+            merged = df
+            if old_dirs:
+                on = list(dict.fromkeys([*keys, partition_by]))
+                old = self.spark.read.option("mergeSchema", "true").parquet(*old_dirs)
+                keep = _anti_join_null_safe(old, df.select(*on).distinct(), on)
+                # allowMissingColumns: a batch carrying a NEW column (or
+                # missing a legacy one) merges cleanly — the Iceberg
+                # add-column path
+                merged = keep.unionByName(df, allowMissingColumns=True)
+            new_parts, rows = self._write_partitioned(table, snap, merged, partition_by)
+        finally:
+            df.unpersist()
         parts.update(new_parts)
         return self._finish(table, "merge", rows, meta, snap, parts)
 

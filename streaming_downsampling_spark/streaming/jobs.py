@@ -213,15 +213,17 @@ def run_tier_stream(
         batch_df = batch_df.withColumn(
             "p_day", F.date_format("window_start", "yyyy-MM-dd")
         ).persist()
-        n = batch_df.count()
-        if n:
-            snap = warehouse.merge_upsert(
-                table, batch_df, keys=["key", "window_start"], partition_by="p_day"
-            )
-            log.record_batch(
-                batch_id, table, "merge", n, n, snap, t0
-            )
-        batch_df.unpersist()
+        try:
+            n = batch_df.count()
+            if n:
+                snap = warehouse.merge_upsert(
+                    table, batch_df, keys=["key", "window_start"], partition_by="p_day"
+                )
+                log.record_batch(
+                    batch_id, table, "merge", n, n, snap, t0
+                )
+        finally:
+            batch_df.unpersist()
         stats["batches"] += 1
         stats["rows_merged"] += n
 
@@ -300,11 +302,13 @@ def refresh_tier_cascade(
     )
     t0 = time.time()
     agg = agg.persist()
-    n = agg.count()
-    snap = warehouse.merge_upsert(
-        dst_table, agg, keys=["key", "window_start"], partition_by="p_day"
-    )
-    agg.unpersist()
+    try:
+        n = agg.count()
+        snap = warehouse.merge_upsert(
+            dst_table, agg, keys=["key", "window_start"], partition_by="p_day"
+        )
+    finally:
+        agg.unpersist()
     log = lineage or LineageLog(warehouse)
     log.record_batch(-1, dst_table, "cascade_refresh", n, n, snap, t0)
     log.flush(spark)

@@ -34,3 +34,9 @@ def transcripts(spark, transcripts_tbl, tmp_path_factory):
     from streaming_downsampling_spark.operators.rollup import with_signal
 
     return with_signal(spark.read.parquet(path))
+
+
+def no_python_rdd(df) -> bool:
+    """True when ``df``'s physical RDD lineage has no ``PythonRDD``, i.e.
+    evaluating it launches no Python worker task."""
+    return "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()

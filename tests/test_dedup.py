@@ -42,3 +42,23 @@ def test_null_text_shares_no_shingle_with_empty_text(spark):
         (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")),
     )
     assert shared.count() == 0
+
+
+def test_empty_graph_components_plan_local_with_typed_schema(spark):
+    """An empty candidate graph gives an empty, typed (node, component)
+    frame with no Python task behind it, on both integral id types."""
+    from conftest import no_python_rdd
+
+    from streaming_downsampling_spark.operators.dedup import (
+        _driver_union_find,
+        connected_components_star,
+    )
+
+    for t in ("bigint", "int"):
+        edges = spark.range(0).select(F.col("id").cast(t).alias("u"), F.col("id").cast(t).alias("v"))
+        got = _driver_union_find(edges)
+        assert got.schema == spark.createDataFrame([], f"node {t}, component {t}").schema
+        assert no_python_rdd(got)
+        assert got.count() == 0
+        pairs = edges.select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b"))
+        assert connected_components_star(pairs).count() == 0

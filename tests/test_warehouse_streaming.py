@@ -284,3 +284,90 @@ def test_json_wire_stream_matches_batch(spark, wh, tmp_path, stream_source):
         .toPandas()
     )
     pd.testing.assert_frame_equal(got, exp, check_exact=True)
+
+
+def _rows(wh, table, snap):
+    return next(s["rows"] for s in wh.snapshots(table) if s["id"] == snap)
+
+
+def test_committed_rows_unpartitioned_overwrite_append_compact_empty(spark, wh):
+    """A snapshot's ``rows`` is the count of the data its operation wrote."""
+    s1 = wh.overwrite("t", spark.range(5).withColumn("v", F.col("id") * 2))
+    assert _rows(wh, "t", s1) == wh.read("t", snapshot_id=s1).count() == 5
+    batch = spark.range(5, 8).withColumn("v", F.col("id") * 2)
+    s2 = wh.append("t", batch)
+    assert _rows(wh, "t", s2) == batch.count() == 3
+    s3 = wh.compact("t")
+    assert _rows(wh, "t", s3) == wh.read("t", snapshot_id=s3).count() == 8
+    s4 = wh.append("t", batch.limit(0))
+    assert _rows(wh, "t", s4) == 0
+    s5 = wh.overwrite("e", batch.limit(0))
+    assert _rows(wh, "e", s5) == wh.read("e", snapshot_id=s5).count() == 0
+
+
+def test_committed_rows_partitioned_merge_compact_default_partition(spark, wh):
+    """Partitioned commits count every written partition dir, including the
+    ``__HIVE_DEFAULT_PARTITION__`` one that NULL and '' land in."""
+    days = ["2024-01-01", "2024-01-02", "2024-01-03"]
+    base = spark.range(30).select(
+        F.col("id").alias("key"),
+        F.concat(F.lit("2024-01-0"), (F.col("id") % 3 + 1).cast("string")).alias("day"),
+        (F.col("id") * 1.5).alias("v"),
+    )
+    s1 = wh.overwrite("pt", base, partition_by="day")
+    assert _rows(wh, "pt", s1) == wh.read("pt", snapshot_id=s1).count() == 30
+    # touches 2 of 3 days: one replaced key, one new key per touched day
+    upd = spark.createDataFrame(
+        [(0, days[0], 99.0), (100, days[0], 1.0), (1, days[1], 98.0), (101, days[1], 2.0)],
+        "key long, day string, v double",
+    )
+    s2 = wh.merge_upsert("pt", upd, keys=["key"], partition_by="day")
+    touched = wh.read("pt", snapshot_id=s2, partitions=days[:2])
+    assert _rows(wh, "pt", s2) == touched.count() == 22
+    s3 = wh.compact("pt", partition_by="day")
+    assert _rows(wh, "pt", s3) == wh.read("pt", snapshot_id=s3).count() == 32
+
+    s4 = wh.overwrite("pt", upd.limit(0), partition_by="day")
+    assert _rows(wh, "pt", s4) == 0 and wh.partition_keys("pt", s4) == []
+
+    nulls = spark.createDataFrame(
+        [(1, None, 1.0), (2, "", 2.0), (3, days[0], 3.0)], "key long, day string, v double"
+    )
+    s5 = wh.overwrite("nd", nulls, partition_by="day")
+    assert wh.partition_keys("nd", s5) == [days[0], "None"]
+    assert _rows(wh, "nd", s5) == wh.read("nd", snapshot_id=s5).count() == 3
+    assert wh.read("nd", snapshot_id=s5, partitions=["None"]).count() == 2
+
+
+def test_lineage_flush_frames_are_local_and_typed(spark, wh):
+    """``LineageLog.flush`` commits the schemas and values the tuple-built
+    frames held, from frames that plan as a LocalTableScan with no Python
+    task."""
+    from conftest import no_python_rdd
+
+    from streaming_downsampling_spark.plans.lineage import LINEAGE_SCHEMA, METRICS_SCHEMA
+
+    frames = {}
+
+    class CapturingWarehouse(Warehouse):
+        def append(self, table, df, partition_by=None):
+            frames[table] = df
+            return super().append(table, df, partition_by=partition_by)
+
+    log = LineageLog(CapturingWarehouse(spark, wh.root), job_id="job1")
+    log.record_batch(0, "tier_1m", "merge", 10, 10, 3, 1.5)
+    log.record_batch(-1, "tier_1h", "cascade_refresh", 2, 2, 4, 2.5)
+    log.gauge("batches", 3)
+    log.gauge("late_rows_dropped", 0.5)
+    pending = {"lineage": list(log._lineage), "metrics": list(log._metrics)}
+    log.flush(spark)
+    for table, schema in (("lineage", LINEAGE_SCHEMA), ("metrics", METRICS_SCHEMA)):
+        df = frames[table]
+        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+        assert no_python_rdd(df)
+        got = wh.read(table)
+        assert got.schema == schema
+        expected = spark.createDataFrame(pending[table], schema).collect()
+        assert sorted(got.collect()) == sorted(expected)
+    gauges = {r["name"]: r["value"] for r in wh.read("metrics").collect()}
+    assert gauges["batches"] == 3.0 and isinstance(gauges["batches"], float)
