@@ -253,6 +253,43 @@ def _start_chain(length_table: bytes, p0: int, m: int) -> np.ndarray:
     return np.array(out, dtype=np.int64)
 
 
+def _dod_lengths(bits: np.ndarray, real_bits: int) -> bytes:
+    """:func:`_start_chain` table of a delta-of-delta stream: the record
+    length if a record started at each bit ('0'→1, '10'+7→9, '110'+9→12,
+    '1110'+12→16, '1111'+64→68).  ``bits`` carries >= 80 zero bits of
+    padding; positions past ``real_bits`` get length 0, so a walk over a
+    stream that claims more records than it holds stops there."""
+    nbits = len(bits) - 3
+    c1 = bits[:nbits]
+    c12 = c1 & bits[1: nbits + 1]
+    c123 = c12 & bits[2: nbits + 2]
+    c1234 = c123 & bits[3: nbits + 3]
+    L = np.uint8(1) + c1 * np.uint8(8) + c12 * np.uint8(3)
+    L += c123 * np.uint8(4) + c1234 * np.uint8(52)
+    L[real_bits:] = 0
+    return L.tobytes()
+
+
+def _xor_lengths(bits: np.ndarray, real_bits: int) -> bytes:
+    """:func:`_start_chain` table of an XOR value stream: '0'→1, '11'→13 +
+    the 6-bit significant-length field at p+7 (uint8 arithmetic: field <=
+    63 and 14 + field <= 77 both fit).  A legacy '10' record's length
+    depends on the previous '11' header, so it gets length 0: the walk
+    stops on the first '10' record, where the caller sees it and falls
+    back to the scalar reader, instead of striding on with wrong lengths
+    past the stream's end.  ``bits`` carries >= 96 zero bits of padding;
+    positions past ``real_bits`` also get length 0."""
+    nbits = len(bits) - 13
+    field = bits[7: 7 + nbits].copy()
+    for k in range(1, 6):
+        field <<= np.uint8(1)
+        field |= bits[7 + k: 7 + k + nbits]
+    L = np.uint8(1) + bits[:nbits] * (np.uint8(13) + field)
+    L[bits[:nbits] > bits[1: nbits + 1]] = 0  # '10'
+    L[real_bits:] = 0
+    return L.tobytes()
+
+
 def _decode_timestamps_scalar(blob: bytes) -> np.ndarray:
     r = _BitReader(blob)
     n = r.read(32)
@@ -296,15 +333,8 @@ def decode_timestamps(blob: bytes) -> np.ndarray:
     d1 = d1 - (1 << 64) if d1 >= (1 << 63) else d1
     m = n - 2
     bits, padded = _bit_array(blob, pad_bits=80)
-    nbits = len(bits) - 3
-    c1 = bits[:nbits]
-    c12 = c1 & bits[1 : nbits + 1]
-    c123 = c12 & bits[2 : nbits + 2]
-    c1234 = c123 & bits[3 : nbits + 3]
-    # lengths: '0'→1, '10'+7→9, '110'+9→12, '1110'+12→16, '1111'+64→68
-    L = np.uint8(1) + c1 * np.uint8(8) + c12 * np.uint8(3)
-    L += c123 * np.uint8(4) + c1234 * np.uint8(52)
-    starts = _start_chain(L.tobytes(), 160, m)  # header = 32 + 64 + 64 bits
+    ltab = _dod_lengths(bits, 8 * len(blob))
+    starts = _start_chain(ltab, 160, m)  # header = 32 + 64 + 64 bits
     t1 = bits[starts]
     t2 = bits[starts + 1]
     t3 = bits[starts + 2]
@@ -417,15 +447,7 @@ def decode_values(blob: bytes) -> np.ndarray:
     first = np.uint64(r.read(64))
     m = n - 1
     bits, padded = _bit_array(blob, pad_bits=96)
-    nbits = len(bits) - 13
-    # 6-bit significant-length field at p+7, for every position p (uint8
-    # arithmetic: field <= 63, and 14 + field <= 77 both fit)
-    field = bits[7:7 + nbits].copy()
-    for k in range(1, 6):
-        field <<= np.uint8(1)
-        field |= bits[7 + k : 7 + k + nbits]
-    L = np.uint8(1) + bits[:nbits] * (np.uint8(13) + field)
-    starts = _start_chain(L.tobytes(), 96, m)  # header = 32 + 64 bits
+    starts = _start_chain(_xor_lengths(bits, 8 * len(blob)), 96, m)  # header 32 + 64
     nz = bits[starts] == 1
     if (nz & (bits[starts + 1] == 0)).any():  # '10' record → legacy stream
         return _decode_values_scalar(blob)
@@ -629,14 +651,7 @@ def decode_timestamps_batched(blobs: list[bytes]) -> tuple[np.ndarray, np.ndarra
     if M:
         bits = np.unpackbits(raw)
         bits_p = np.concatenate([bits, np.zeros(80, dtype=np.uint8)])
-        nb = len(bits_p) - 3
-        c1 = bits_p[:nb]
-        c12 = c1 & bits_p[1: nb + 1]
-        c123 = c12 & bits_p[2: nb + 2]
-        c1234 = c123 & bits_p[3: nb + 3]
-        L = np.uint8(1) + c1 * np.uint8(8) + c12 * np.uint8(3)
-        L += c123 * np.uint8(4) + c1234 * np.uint8(52)
-        ltab = L.tobytes()
+        ltab = _dod_lengths(bits_p, len(bits))
         starts = np.concatenate(
             [
                 _start_chain(ltab, int(bitpos[g]) + 160, int(m[g]))
@@ -690,13 +705,7 @@ def decode_values_batched(blobs: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
     if M:
         bits = np.unpackbits(raw)
         bits_p = np.concatenate([bits, np.zeros(96, dtype=np.uint8)])
-        nb = len(bits_p) - 13
-        field = bits_p[7: 7 + nb].copy()
-        for kshift in range(1, 6):
-            field <<= np.uint8(1)
-            field |= bits_p[7 + kshift: 7 + kshift + nb]
-        L = np.uint8(1) + bits_p[:nb] * (np.uint8(13) + field)
-        ltab = L.tobytes()
+        ltab = _xor_lengths(bits_p, len(bits))
         starts = np.concatenate(
             [
                 _start_chain(ltab, int(bitpos[g]) + 96, int(m[g]))

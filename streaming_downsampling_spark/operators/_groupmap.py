@@ -13,15 +13,20 @@ groups that straddle batch boundaries.  One shuffle, same semantics,
 per-group cost ~µs.  At 10^12 turns the group count is O(10^9); this pattern
 is the difference between hours and weeks.
 
-The other fixed cost is per Python TASK, not per row or group: before each
+The other fixed cost is per Python TASK, not per row or group.  Before each
 task PySpark's ``worker_util.setup_spark_files`` calls
-``importlib.invalidate_caches()``, which re-reads the central directory of
-every zip importer on the worker's path (``pyspark.zip`` about 14 times, the
-spark-core jar and py4j once each) — 0.16–0.24 CPU s per task on a 4-core
-host with Spark 4.1.2.  An identity ``mapInArrow`` over 8 partitions cost
-~2.2 CPU s there, against ~0.5 CPU s over one.  So the exchange feeding the
-kernels runs one wave of one task per core (:func:`_exchange_partitions`),
-not ``spark.sql.shuffle.partitions`` tasks.
+``importlib.invalidate_caches()``; a worker that imported PySpark out of
+Spark's ``pyspark.zip`` then re-parses the zip's central directory (1,328
+entries) once per cached ``zipimporter`` — about 14 of them, plus the
+spark-core jar and py4j — at 0.16–0.24 CPU s per task on a 4-core host with
+Spark 4.1.2.  ``get_spark`` sessions start the worker daemon from
+:mod:`streaming_downsampling_spark._daemon`, which takes those archives off
+the workers' path, so they import the installed PySpark and the re-read is
+gone: an identity ``mapInArrow`` over 8 partitions (driver + JVM + workers)
+fell from ~2.3 CPU s to ~0.72 CPU s there.  The exchange feeding the
+kernels still runs one wave of one task per core
+(:func:`_exchange_partitions`), not ``spark.sql.shuffle.partitions`` tasks:
+each task still costs a worker round trip and a setup pass.
 """
 
 from __future__ import annotations
@@ -36,8 +41,9 @@ from pyspark.sql import DataFrame, functions as F
 def _exchange_partitions(df: DataFrame) -> int:
     """Partition count of the exchange feeding the grouped kernels:
     ``min(spark.sql.shuffle.partitions, defaultParallelism)``.  Every
-    partition is one Python task paying the per-task floor in the module
-    docstring, so one task per core replaces ``shuffle.partitions`` tasks in
+    partition is one Python task paying the per-task setup in the module
+    docstring (small since the daemon module dropped the zip re-read, but
+    not zero), so one task per core replaces ``shuffle.partitions`` tasks in
     several waves; a session whose core count reaches ``shuffle.partitions``
     keeps ``shuffle.partitions``."""
     spark = df.sparkSession

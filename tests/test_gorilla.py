@@ -127,6 +127,37 @@ def test_decode_values_legacy_window_reuse():
     assert np.array_equal(got.view(np.uint64), bits)
 
 
+def _long_legacy_blob(n: int) -> bytes:
+    """``n`` values: 1.0, one '11' record (lead 10, sig 2, payload 0b11),
+    then n-2 '10' window-reuse records with payload 0b01.  The vectorized
+    length table is wrong at every '10' record, so an unguarded start-chain
+    walk strides past the end of a long enough blob."""
+    w = g._BitWriter()
+    w.write(n, 32)
+    w.write(int(np.float64(1.0).view(np.uint64)), 64)
+    w.write(0b11, 2)
+    w.write(10, 5)
+    w.write(2 - 1, 6)
+    w.write(0b11, 2)
+    for _ in range(n - 2):
+        w.write(0b10, 2)
+        w.write(0b01, 2)
+    return w.getvalue()
+
+
+@pytest.mark.parametrize("n", [3, 20, 200, 2000])
+def test_long_legacy_stream_falls_back_instead_of_raising(n):
+    blob = _long_legacy_blob(n)
+    exp = g._decode_values_scalar(blob).view(np.uint64)
+    assert np.array_equal(g.decode_values(blob).view(np.uint64), exp)
+    ours = g.encode_values(np.round(np.random.default_rng(n).normal(size=50), 3))
+    for blobs in ([blob], [ours, blob], [blob, ours]):
+        got, counts = g.decode_values_batched(blobs)
+        want = np.concatenate([g._decode_values_scalar(b) for b in blobs])
+        assert counts.tolist() == [len(g._decode_values_scalar(b)) for b in blobs]
+        assert np.array_equal(got.view(np.uint64), want.view(np.uint64))
+
+
 def test_batched_encode_decode_equals_per_chunk():
     """The batched (whole-frame) encoders/decoders are byte- and
     bit-identical to the per-chunk ones on randomized group sets covering
