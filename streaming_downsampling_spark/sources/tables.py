@@ -12,6 +12,18 @@ thin, swappable layer (SURVEY.md §7.2 M0 fallback):
   carries the snapshot lineage (id, parent, operation, row count, manifest);
   the row count (``rows``) is what the operation wrote, summed from the
   footers of the parquet files it just wrote — no read-back job,
+* like Iceberg's ``metadata.json``, each snapshot also records the table
+  ``schema`` (``StructType.jsonValue()``) and its ``partition_by`` column
+  (``None`` when unpartitioned).  Reads pass that schema to the parquet
+  reader, so no footer-scan job runs to infer it.  ``append`` and
+  ``merge_upsert`` union it by name with the batch's (new columns are
+  appended and read as NULL from older files) and reject a column whose
+  type changes; ``overwrite`` records its frame's schema.  Snapshots
+  written before these fields existed are read with ``mergeSchema``,
+* partitioned writes rebalance rows on the partition value before
+  ``partitionBy`` (Iceberg's ``hash`` write distribution), so each touched
+  partition gets one file instead of one per input split; AQE still splits
+  a large partition at ``advisoryPartitionSizeInBytes``,
 * readers always resolve the *current* snapshot → readers never see partial
   writes (the Iceberg atomic-commit property),
 * ``append`` commits ONLY the new batch's files — O(batch) I/O, the old
@@ -37,6 +49,7 @@ import time
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 UNPARTITIONED = "*"
 
@@ -50,6 +63,27 @@ def _parquet_rows(path: str) -> int:
         for f in os.listdir(path)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
+
+
+def _union_schema(old: StructType, new: StructType) -> StructType:
+    """``old`` with the columns of ``new`` it lacks appended, matched by
+    name; existing columns keep their position.  A column whose type
+    differs raises ``ValueError``, at commit rather than at a later read."""
+    have = {f.name: f.dataType.simpleString() for f in old}
+    for f in new:
+        t = f.dataType.simpleString()
+        if have.get(f.name, t) != t:
+            raise ValueError(
+                f"column {f.name!r} cannot change type from {have[f.name]} to {t}"
+            )
+    return StructType([*old, *(f for f in new if f.name not in have)])
+
+
+def _kept_partition_by(entry: dict, partition_by: str | None) -> str | None:
+    """The partition column a commit onto ``entry`` records: ``None`` once
+    the manifest mixes layouts (or ``entry`` predates the field), which
+    makes the next ``compact`` rewrite the whole table."""
+    return partition_by if entry.get("partition_by") == partition_by else None
 
 
 def _anti_join_null_safe(old: DataFrame, batch_keys: DataFrame, on: list[str]) -> DataFrame:
@@ -139,17 +173,44 @@ class Warehouse:
             raise FileNotFoundError(
                 f"no data for table {table!r} partitions {partitions!r}"
             )
-        # mergeSchema: dirs written before a column was added lack it —
-        # schema-evolution reads fill the gap with nulls (Iceberg add-column
-        # semantics)
-        return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+        return self._scan(dirs, entry)
+
+    def _scan(self, dirs: list[str], entry: dict) -> DataFrame:
+        """Parquet read of ``dirs`` under ``entry``'s recorded schema: dirs
+        written before a column was added lack it and read it as NULL
+        (Iceberg add-column semantics).  A snapshot without a recorded
+        schema merges the footers instead, which costs a Spark job."""
+        if "schema" not in entry:
+            return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+        return self.spark.read.schema(StructType.fromJson(entry["schema"])).parquet(*dirs)
+
+    def _schema(self, table: str, entry: dict) -> StructType:
+        """``entry``'s table schema; merged from the footers of every data
+        dir when the snapshot predates the recorded schema."""
+        if "schema" in entry:
+            return StructType.fromJson(entry["schema"])
+        dirs = [self._data_dir(table, d) for ds in entry["parts"].values() for d in ds]
+        return self._scan(dirs, entry).schema if dirs else StructType()
 
     def _next_snap(self, meta: dict) -> int:
         return (meta["current"] or 0) + 1 if meta["snapshots"] else 1
 
     def _finish(
-        self, table: str, op: str, rows: int, meta: dict, snap: int, parts: dict
+        self,
+        table: str,
+        op: str,
+        rows: int,
+        meta: dict,
+        snap: int,
+        parts: dict,
+        schema: StructType | None,
+        partition_by: str | None,
     ) -> int:
+        """Commit snapshot ``snap``.  ``schema=None`` carries a snapshot
+        that predates the recorded schema and partition column as it is."""
+        layout = {} if schema is None else {
+            "schema": schema.jsonValue(), "partition_by": partition_by
+        }
         meta["snapshots"].append(
             {
                 "id": snap,
@@ -157,6 +218,7 @@ class Warehouse:
                 "op": op,
                 "rows": rows,
                 "parts": parts,
+                **layout,
                 "committed_at": time.time(),
             }
         )
@@ -172,7 +234,7 @@ class Warehouse:
     def _write_partitioned(
         self, table: str, snap: int, df: DataFrame, partition_by: str
     ) -> tuple[dict, int]:
-        """All touched partition values in ONE Spark job.
+        """All touched partition values in ONE Spark job, one file each.
 
         ``partitionBy`` on a duplicated string key (``__part``) fans the
         batch into one immutable subdir per value while the original
@@ -180,14 +242,28 @@ class Warehouse:
         manifest is built from the written directories, so no driver-side
         ``collect()`` of values and no per-value job.  A backfill touching
         1,000 days is one job, not 1,000 sequential jobs (round-2 verdict
-        finding)."""
+        finding).
+
+        Without a shuffle on ``__part`` every input split writes its own
+        file into each partition it holds rows of, and a MERGE's input is
+        the old files' splits plus the batch's partitions.  The
+        ``rebalance`` hint clusters each value into one task (Iceberg's
+        ``hash`` write distribution); AQE coalesces the small ones and
+        splits a large one at ``advisoryPartitionSizeInBytes``.  Without
+        AQE a plain hash repartition on ``__part`` does the clustering."""
         from urllib.parse import unquote
 
         base = f"d{snap}"
         out = self._data_dir(table, base)
-        df.withColumn("__part", F.col(partition_by).cast("string")).write.mode(
-            "overwrite"
-        ).partitionBy("__part").parquet(out)
+        parted = df.withColumn("__part", F.col(partition_by).cast("string"))
+        # the analyzer drops REBALANCE where AQE is off, as in the frame a
+        # stateful stream hands to foreachBatch; a hash repartition there
+        # still gives one file per value
+        if df.sparkSession.conf.get("spark.sql.adaptive.enabled").lower() == "true":
+            parted = parted.hint("rebalance", "__part")
+        else:
+            parted = parted.repartition("__part")
+        parted.write.mode("overwrite").partitionBy("__part").parquet(out)
         parts = {}
         rows = 0
         for d in sorted(os.listdir(out)):
@@ -218,7 +294,7 @@ class Warehouse:
             parts = {UNPARTITIONED: [name]}
         else:
             parts, rows = self._write_partitioned(table, snap, df, partition_by)
-        return self._finish(table, op, rows, meta, snap, parts)
+        return self._finish(table, op, rows, meta, snap, parts, df.schema, partition_by)
 
     def append(
         self, table: str, df: DataFrame, partition_by: str | None = None
@@ -228,8 +304,10 @@ class Warehouse:
         if not self.exists(table):
             return self.overwrite(table, df, op="append", partition_by=partition_by)
         meta = self._load_meta(table)
+        entry = self._snapshot_entry(meta, None)
+        schema = _union_schema(self._schema(table, entry), df.schema)
         snap = self._next_snap(meta)
-        parts = {p: list(ds) for p, ds in self._snapshot_entry(meta, None)["parts"].items()}
+        parts = {p: list(ds) for p, ds in entry["parts"].items()}
         if partition_by is None:
             name = f"d{snap}-0"
             rows = self._write_dir(table, name, df)
@@ -238,7 +316,10 @@ class Warehouse:
             new_parts, rows = self._write_partitioned(table, snap, df, partition_by)
             for p, ds in new_parts.items():
                 parts.setdefault(p, []).extend(ds)
-        return self._finish(table, "append", rows, meta, snap, parts)
+        return self._finish(
+            table, "append", rows, meta, snap, parts, schema,
+            _kept_partition_by(entry, partition_by),
+        )
 
     def merge_upsert(
         self,
@@ -261,7 +342,10 @@ class Warehouse:
         if not self.exists(table):
             return self.overwrite(table, df, op="merge", partition_by=partition_by)
         meta = self._load_meta(table)
-        cur = self._snapshot_entry(meta, None)["parts"]
+        entry = self._snapshot_entry(meta, None)
+        cur = entry["parts"]
+        # before any write: a type change fails here, not at a later read
+        schema = _union_schema(self._schema(table, entry), df.schema)
         if partition_by is None or UNPARTITIONED in cur:
             # unpartitioned (or one-time migration of a table created
             # unpartitioned): full merge rewrite
@@ -309,7 +393,7 @@ class Warehouse:
             merged = df
             if old_dirs:
                 on = list(dict.fromkeys([*keys, partition_by]))
-                old = self.spark.read.option("mergeSchema", "true").parquet(*old_dirs)
+                old = self._scan(old_dirs, entry)
                 keep = _anti_join_null_safe(old, df.select(*on).distinct(), on)
                 # allowMissingColumns: a batch carrying a NEW column (or
                 # missing a legacy one) merges cleanly — the Iceberg
@@ -319,7 +403,10 @@ class Warehouse:
         finally:
             df.unpersist()
         parts.update(new_parts)
-        return self._finish(table, "merge", rows, meta, snap, parts)
+        return self._finish(
+            table, "merge", rows, meta, snap, parts, schema,
+            _kept_partition_by(entry, partition_by),
+        )
 
     def compact(self, table: str, partition_by: str | None = None) -> int:
         """Rewrite the current snapshot into ONE data dir per partition
@@ -328,9 +415,40 @@ class Warehouse:
         accumulates read fan-out and manifest growth; compaction restores
         O(#partitions) dirs in one partitionBy job.  A normal snapshot
         commit — time travel still reaches the pre-compaction layout until
-        ``expire_snapshots`` reclaims it."""
-        return self.overwrite(
-            table, self.read(table), op="compact", partition_by=partition_by
+        ``expire_snapshots`` reclaims it.
+
+        Like ``rewrite_data_files`` with ``min-input-files`` = 2, only
+        partitions holding more than one dir are rewritten; the others carry
+        over by reference, as in ``append``, and a table with none launches
+        no Spark job.  ``rows`` is then the footer count of the carried dirs
+        plus the rows written.  The whole table is rewritten instead when it
+        is unpartitioned, when its manifest holds ``UNPARTITIONED`` dirs or
+        predates the recorded partition column (both record
+        ``partition_by`` as ``None`` or not at all), or when
+        ``partition_by`` names another column than the recorded one."""
+        meta = self._load_meta(table)
+        entry = self._snapshot_entry(meta, None)
+        if partition_by is None or entry.get("partition_by") != partition_by:
+            return self.overwrite(
+                table, self.read(table), op="compact", partition_by=partition_by
+            )
+        snap = self._next_snap(meta)
+        parts = {p: list(ds) for p, ds in entry["parts"].items()}
+        fragmented = [self._data_dir(table, d) for ds in parts.values() if len(ds) > 1 for d in ds]
+        rows = sum(
+            _parquet_rows(self._data_dir(table, d))
+            for ds in parts.values()
+            if len(ds) == 1
+            for d in ds
+        )
+        if fragmented:
+            new_parts, written = self._write_partitioned(
+                table, snap, self._scan(fragmented, entry), partition_by
+            )
+            parts.update(new_parts)
+            rows += written
+        return self._finish(
+            table, "compact", rows, meta, snap, parts, self._schema(table, entry), partition_by
         )
 
     def partition_keys(self, table: str, snapshot_id: int | None = None) -> list[str]:
@@ -347,10 +465,17 @@ class Warehouse:
         ``expire_snapshots`` once no kept snapshot references them.
         """
         meta = self._load_meta(table)
-        cur = self._snapshot_entry(meta, None)["parts"]
-        parts = {p: list(ds) for p, ds in cur.items() if not (p != UNPARTITIONED and p < before)}
+        entry = self._snapshot_entry(meta, None)
+        parts = {
+            p: list(ds)
+            for p, ds in entry["parts"].items()
+            if not (p != UNPARTITIONED and p < before)
+        }
         snap = self._next_snap(meta)
-        return self._finish(table, "expire_partitions", 0, meta, snap, parts)
+        schema = StructType.fromJson(entry["schema"]) if "schema" in entry else None
+        return self._finish(
+            table, "expire_partitions", 0, meta, snap, parts, schema, entry.get("partition_by")
+        )
 
     def expire_snapshots(self, table: str, keep_last: int = 2) -> list[int]:
         """Retention: drop all but the newest ``keep_last`` snapshots and

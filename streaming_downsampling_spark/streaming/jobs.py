@@ -274,10 +274,20 @@ def refresh_tier_cascade(
     columns (n/sum/min/max compose exactly; avg recomputed from them), and
     MERGEs partition-scoped into the destination.  Exact because coarse
     windows (1h/1d) never span a day boundary: a refreshed day's coarse
-    windows depend only on that day's fine rows.
+    windows depend only on that day's fine rows.  With no fine day to read
+    it commits nothing and returns ``rows`` 0 and the destination's current
+    snapshot (``None`` if it has none).
     """
     keys = warehouse.partition_keys(src_table)
     selected = [k for k in keys if since_day is None or k >= since_day]
+    if not selected:
+        # no fine day at or after since_day, or retention expired them all:
+        # nothing to aggregate, so no MERGE commit
+        return {
+            "rows": 0,
+            "snapshot": warehouse.current_snapshot(dst_table),
+            "partitions_read": 0,
+        }
     fine = warehouse.read(src_table, partitions=selected)
     w = F.window("window_start", tier_interval(to_tier))
     agg = (

@@ -40,3 +40,19 @@ def no_python_rdd(df) -> bool:
     """True when ``df``'s physical RDD lineage has no ``PythonRDD``, i.e.
     evaluating it launches no Python worker task."""
     return "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def _job_count(spark, fn):
+    """Spark jobs without a job group that ``fn`` submits.  Counts the job
+    ids above the newest one seen before ``fn``, after draining the listener
+    bus on both sides: the status store only sees a job once the bus has
+    delivered its start event, and it keeps only the last
+    ``spark.ui.retainedJobs`` jobs, so a difference of list lengths stops
+    counting in a long session."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+    bus.waitUntilEmpty()
+    newest = max(tracker.getJobIdsForGroup(None) or [-1])
+    fn()
+    bus.waitUntilEmpty()
+    return sum(1 for j in tracker.getJobIdsForGroup(None) or [] if j > newest)

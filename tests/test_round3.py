@@ -9,6 +9,7 @@ import gc
 
 import pandas as pd
 import pytest
+from conftest import _job_count
 from pyspark.sql import functions as F
 
 
@@ -344,14 +345,6 @@ def test_connected_components_raises_when_unconverged(spark):
 # ---------------------------------------------------------------------------
 # warehouse: O(1) Spark jobs per partitioned commit
 # ---------------------------------------------------------------------------
-
-
-def _job_count(spark, fn):
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    fn()
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    return after - before
 
 
 def test_warehouse_schema_evolution_and_compaction(spark, tmp_path):

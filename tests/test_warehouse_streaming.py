@@ -371,3 +371,195 @@ def test_lineage_flush_frames_are_local_and_typed(spark, wh):
         assert sorted(got.collect()) == sorted(expected)
     gauges = {r["name"]: r["value"] for r in wh.read("metrics").collect()}
     assert gauges["batches"] == 3.0 and isinstance(gauges["batches"], float)
+
+
+def _tier_rows(spark, days):
+    """One 1m fine-tier row per day, in the streaming tier's schema."""
+    import datetime as dt
+
+    rows = []
+    for i, day in enumerate(days):
+        start = dt.datetime.fromisoformat(day).replace(tzinfo=dt.timezone.utc)
+        rows.append(
+            ("c1", start, start + dt.timedelta(minutes=1), 2, 3.0 + i, 1.0, 2.0, 1.5 + i / 2, day)
+        )
+    return spark.createDataFrame(
+        rows,
+        "key string, window_start timestamp, window_end timestamp, n_points long, "
+        "sum_value double, min_value double, max_value double, avg_value double, "
+        "p_day string",
+    )
+
+
+def test_refresh_tier_cascade_with_nothing_to_refresh(spark, wh):
+    """No fine day at or after ``since_day``, or none left after retention:
+    the refresh returns 0 rows and commits no MERGE."""
+    from streaming_downsampling_spark.streaming.jobs import refresh_tier_cascade
+
+    keys = ["key", "window_start"]
+    wh.merge_upsert("t1m", _tier_rows(spark, ["2024-01-01"]), keys=keys, partition_by="p_day")
+    out = refresh_tier_cascade(spark, wh, "t1m", "t1h", since_day="2024-01-02")
+    assert out == {"rows": 0, "snapshot": None, "partitions_read": 0}
+    assert not wh.exists("t1h")
+
+    first = refresh_tier_cascade(spark, wh, "t1m", "t1h")
+    assert first["rows"] == 1
+    wh.expire_partitions("t1m", before="2024-01-02")
+    snaps = wh.snapshots("t1h")
+    out = refresh_tier_cascade(spark, wh, "t1m", "t1h")
+    assert out == {"rows": 0, "snapshot": first["snapshot"], "partitions_read": 0}
+    assert wh.snapshots("t1h") == snaps
+
+
+def _parquet_files(wh, table, d):
+    return [
+        f for f in os.listdir(os.path.join(wh.root, table, "data", d)) if f.endswith(".parquet")
+    ]
+
+
+def test_merge_writes_one_file_per_touched_partition(spark, wh):
+    """A MERGE of a batch spread over 8 splits into a day holding two
+    commits' files writes ONE file per touched partition, carries the
+    untouched day by reference, and keeps MERGE semantics."""
+    days = ["2024-01-01", "2024-01-02", "2024-01-03"]
+
+    def rows(keys, tag):
+        return [(k, days[k % 3], float(k) + tag) for k in keys]
+
+    schema = "key long, day string, v double"
+    base = spark.createDataFrame(rows(range(60), 0.0), schema).repartition(4)
+    wh.overwrite("pt", base, partition_by="day")
+    wh.append("pt", spark.createDataFrame(rows(range(60, 90), 0.0), schema), partition_by="day")
+    before = wh.snapshots("pt")[-1]["parts"]
+    assert all(len(ds) == 2 for ds in before.values())
+    # keys on days 1 and 2 only: half replace stored keys, half are new
+    upd = [r for r in rows(range(0, 120, 2), 0.5) if r[1] != days[2]]
+    wh.merge_upsert("pt", spark.createDataFrame(upd, schema).repartition(8), ["key"], "day")
+
+    after = wh.snapshots("pt")[-1]["parts"]
+    assert after[days[2]] == before[days[2]]
+    for day in days[:2]:
+        (d,) = after[day]
+        assert len(_parquet_files(wh, "pt", d)) == 1, d
+    expected = {k: (day, v) for k, day, v in rows(range(90), 0.0)}
+    expected.update({k: (day, v) for k, day, v in upd})
+    assert {r["key"]: (r["day"], r["v"]) for r in wh.read("pt").collect()} == expected
+    assert wh.read("pt").count() == len(expected)
+
+
+def test_stream_sink_commit_writes_one_file_per_partition(spark, wh, tmp_path, stream_source):
+    """The sink's first commit writes from the micro-batch frame itself,
+    whose session runs without AQE: still one file per partition dir."""
+    import shutil
+
+    src_dir, _ = stream_source
+    one = tmp_path / "one_src"
+    os.makedirs(one)
+    shutil.copy(sorted(glob.glob(f"{src_dir}/*.parquet"))[0], one)
+    stats = run_tier_stream(
+        spark, str(one), str(tmp_path / "ck1"), wh, table="r1m_f", tier="1m",
+        watermark="3650 days",
+    )
+    assert stats["batches"] >= 1 and len(wh.snapshots("r1m_f")) == 1
+    dirs = [d for ds in wh.snapshots("r1m_f")[-1]["parts"].values() for d in ds]
+    assert dirs and all(len(_parquet_files(wh, "r1m_f", d)) == 1 for d in dirs)
+
+
+def test_compact_rewrites_only_fragmented_partitions(spark, wh):
+    """``compact`` with every partition in one dir runs no Spark job and
+    keeps every dir; a fragmented partition is rewritten into one dir while
+    the others keep theirs.  Whole-table rewrites stay correct."""
+    from conftest import _job_count
+
+    days = ["2024-01-01", "2024-01-02", "2024-01-03"]
+    schema = "key long, day string, v double"
+    base = spark.createDataFrame([(k, days[k % 3], k * 1.5) for k in range(30)], schema)
+    wh.overwrite("pt", base, partition_by="day")
+    parts = wh.snapshots("pt")[-1]["parts"]
+    assert _job_count(spark, lambda: wh.compact("pt", partition_by="day")) == 0
+    snap = wh.snapshots("pt")[-1]
+    assert snap["op"] == "compact" and snap["parts"] == parts
+    assert snap["rows"] == wh.read("pt").count() == 30
+
+    wh.append("pt", spark.createDataFrame([(30, days[0], 0.5), (31, days[0], 0.25)], schema), "day")
+    fragmented = wh.snapshots("pt")[-1]["parts"]
+    assert len(fragmented[days[0]]) == 2
+    expected = sorted(wh.read("pt").collect())
+    s = wh.compact("pt", partition_by="day")
+    after = wh.snapshots("pt")[-1]["parts"]
+    assert {p: after[p] for p in days[1:]} == {p: parts[p] for p in days[1:]}
+    assert len(after[days[0]]) == 1 and after[days[0]] != fragmented[days[0]]
+    assert _rows(wh, "pt", s) == 32
+    assert sorted(wh.read("pt").collect()) == expected
+
+    # whole-table rewrites: unpartitioned, the NULL/'' partition, and a
+    # partition_by other than the recorded column
+    wh.overwrite("u", base)
+    wh.append("u", base.limit(3))
+    s = wh.compact("u")
+    assert wh.partition_keys("u") == ["*"] and len(wh.snapshots("u")[-1]["parts"]["*"]) == 1
+    assert _rows(wh, "u", s) == wh.read("u").count() == 33
+
+    nulls = spark.createDataFrame([(1, None, 1.0), (2, "", 2.0), (3, days[0], 3.0)], schema)
+    wh.overwrite("nd", nulls, partition_by="day")
+    wh.append("nd", nulls, partition_by="day")
+    s = wh.compact("nd", partition_by="day")
+    after = wh.snapshots("nd")[-1]["parts"]
+    assert sorted(after) == [days[0], "None"] and all(len(ds) == 1 for ds in after.values())
+    assert _rows(wh, "nd", s) == 6
+    got = sorted(str(r["day"]) for r in wh.read("nd", partitions=["None"]).collect())
+    assert got == ["", "", "None", "None"]
+
+    s = wh.compact("pt", partition_by="key")
+    assert wh.snapshots("pt")[-1]["partition_by"] == "key"
+    assert wh.partition_keys("pt") == sorted(str(k) for k in range(32))
+    assert _rows(wh, "pt", s) == 32
+    assert sorted(wh.read("pt").select(*base.columns).collect()) == expected
+
+
+def test_read_takes_schema_from_manifest(spark, wh):
+    """Reads take the schema the manifest records: no Spark job, an added
+    column reads as NULL on older partitions, a type change fails at commit,
+    and a snapshot without the recorded schema reads the same rows."""
+    import json
+
+    from conftest import _job_count
+
+    def batch(days, cols, v=1.0):
+        rows = [
+            (f"2024-01-0{d}", f"{d}-{i}", *[v] * (len(cols) - 2)) for d in days for i in range(3)
+        ]
+        return spark.createDataFrame(rows, ", ".join(cols))
+
+    cols = ["day string", "k string", "v double"]
+    wh.overwrite("t", batch([1, 2], cols), partition_by="day")
+    wh.merge_upsert("t", batch([2], [*cols, "extra double"], 2.0), ["k"], partition_by="day")
+    assert _job_count(spark, lambda: wh.read("t")) == 0
+    got = wh.read("t")
+    assert got.columns == ["day", "k", "v", "extra"]
+    extra = {(r["day"], r["extra"]) for r in got.collect()}
+    assert extra == {("2024-01-01", None), ("2024-01-02", 2.0)}
+
+    snaps = wh.snapshots("t")
+    for op in (
+        lambda: wh.merge_upsert("t", batch([1], [*cols[:2], "v string"], "x"), ["k"], "day"),
+        lambda: wh.append("t", batch([3], [*cols[:2], "v string"], "x"), "day"),
+    ):
+        with pytest.raises(ValueError, match="'v'.*double.*string"):
+            op()
+    assert wh.snapshots("t") == snaps
+
+    expected = {frozenset(r.asDict().items()) for r in got.collect()}
+    path = os.path.join(wh.root, "t", "metadata.json")
+    with open(path) as f:
+        meta = json.load(f)
+    for s in meta["snapshots"]:
+        del s["schema"], s["partition_by"]
+    with open(path, "w") as f:
+        json.dump(meta, f)
+    assert {frozenset(r.asDict().items()) for r in wh.read("t").collect()} == expected
+    # a compaction of the legacy snapshot rewrites it and records both again
+    wh.compact("t", partition_by="day")
+    snap = wh.snapshots("t")[-1]
+    assert snap["partition_by"] == "day" and "schema" in snap
+    assert {frozenset(r.asDict().items()) for r in wh.read("t").collect()} == expected
