@@ -18,12 +18,12 @@ thin, swappable layer (SURVEY.md §7.2 M0 fallback):
   reader, so no footer-scan job runs to infer it.  ``append`` and
   ``merge_upsert`` union it by name with the batch's (new columns are
   appended and read as NULL from older files) and reject a column whose
-  type changes; ``overwrite`` records its frame's schema.  Snapshots
-  written before these fields existed are read with ``mergeSchema``,
-* partitioned writes rebalance rows on the partition value before
-  ``partitionBy`` (Iceberg's ``hash`` write distribution), so each touched
-  partition gets one file instead of one per input split; AQE still splits
-  a large partition at ``advisoryPartitionSizeInBytes``,
+  type changes; ``overwrite`` records its frame's schema,
+* MERGE and compaction rewrites hash-partition rows on the partition value
+  before ``partitionBy`` (Iceberg's ``hash`` write distribution), so each
+  touched partition gets one file instead of one per input split;
+  ``overwrite`` and ``append`` write their frame as it is split, one writer
+  per split, because the extra shuffle slows a bulk write of few partitions,
 * readers always resolve the *current* snapshot → readers never see partial
   writes (the Iceberg atomic-commit property),
 * ``append`` commits ONLY the new batch's files — O(batch) I/O, the old
@@ -81,9 +81,19 @@ def _union_schema(old: StructType, new: StructType) -> StructType:
 
 def _kept_partition_by(entry: dict, partition_by: str | None) -> str | None:
     """The partition column a commit onto ``entry`` records: ``None`` once
-    the manifest mixes layouts (or ``entry`` predates the field), which
-    makes the next ``compact`` rewrite the whole table."""
-    return partition_by if entry.get("partition_by") == partition_by else None
+    the manifest mixes layouts, which makes the next ``compact`` rewrite the
+    whole table."""
+    return partition_by if entry["partition_by"] == partition_by else None
+
+
+def _clustered(df: DataFrame, partition_by: str | None) -> DataFrame:
+    """``df`` hash-partitioned on its partition value, so ``partitionBy``
+    writes one file per value instead of one per input split (Iceberg's
+    ``hash`` write distribution).  AQE coalesces the small shuffle
+    partitions; unpartitioned frames pass through."""
+    if partition_by is None:
+        return df
+    return df.repartition(F.col(partition_by).cast("string"))
 
 
 def _anti_join_null_safe(old: DataFrame, batch_keys: DataFrame, on: list[str]) -> DataFrame:
@@ -178,19 +188,8 @@ class Warehouse:
     def _scan(self, dirs: list[str], entry: dict) -> DataFrame:
         """Parquet read of ``dirs`` under ``entry``'s recorded schema: dirs
         written before a column was added lack it and read it as NULL
-        (Iceberg add-column semantics).  A snapshot without a recorded
-        schema merges the footers instead, which costs a Spark job."""
-        if "schema" not in entry:
-            return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+        (Iceberg add-column semantics)."""
         return self.spark.read.schema(StructType.fromJson(entry["schema"])).parquet(*dirs)
-
-    def _schema(self, table: str, entry: dict) -> StructType:
-        """``entry``'s table schema; merged from the footers of every data
-        dir when the snapshot predates the recorded schema."""
-        if "schema" in entry:
-            return StructType.fromJson(entry["schema"])
-        dirs = [self._data_dir(table, d) for ds in entry["parts"].values() for d in ds]
-        return self._scan(dirs, entry).schema if dirs else StructType()
 
     def _next_snap(self, meta: dict) -> int:
         return (meta["current"] or 0) + 1 if meta["snapshots"] else 1
@@ -203,14 +202,11 @@ class Warehouse:
         meta: dict,
         snap: int,
         parts: dict,
-        schema: StructType | None,
+        schema: dict,
         partition_by: str | None,
     ) -> int:
-        """Commit snapshot ``snap``.  ``schema=None`` carries a snapshot
-        that predates the recorded schema and partition column as it is."""
-        layout = {} if schema is None else {
-            "schema": schema.jsonValue(), "partition_by": partition_by
-        }
+        """Commit snapshot ``snap`` with table ``schema``
+        (``StructType.jsonValue()``) and its ``partition_by`` column."""
         meta["snapshots"].append(
             {
                 "id": snap,
@@ -218,7 +214,8 @@ class Warehouse:
                 "op": op,
                 "rows": rows,
                 "parts": parts,
-                **layout,
+                "schema": schema,
+                "partition_by": partition_by,
                 "committed_at": time.time(),
             }
         )
@@ -234,7 +231,7 @@ class Warehouse:
     def _write_partitioned(
         self, table: str, snap: int, df: DataFrame, partition_by: str
     ) -> tuple[dict, int]:
-        """All touched partition values in ONE Spark job, one file each.
+        """All touched partition values in ONE Spark job.
 
         ``partitionBy`` on a duplicated string key (``__part``) fans the
         batch into one immutable subdir per value while the original
@@ -244,25 +241,15 @@ class Warehouse:
         1,000 days is one job, not 1,000 sequential jobs (round-2 verdict
         finding).
 
-        Without a shuffle on ``__part`` every input split writes its own
-        file into each partition it holds rows of, and a MERGE's input is
-        the old files' splits plus the batch's partitions.  The
-        ``rebalance`` hint clusters each value into one task (Iceberg's
-        ``hash`` write distribution); AQE coalesces the small ones and
-        splits a large one at ``advisoryPartitionSizeInBytes``.  Without
-        AQE a plain hash repartition on ``__part`` does the clustering."""
+        Every task writes its own file into each partition it holds rows
+        of.  A MERGE's input is the old files' splits plus the batch's
+        partitions, so its callers pass a ``_clustered`` frame, which gives
+        one file per partition value."""
         from urllib.parse import unquote
 
         base = f"d{snap}"
         out = self._data_dir(table, base)
         parted = df.withColumn("__part", F.col(partition_by).cast("string"))
-        # the analyzer drops REBALANCE where AQE is off, as in the frame a
-        # stateful stream hands to foreachBatch; a hash repartition there
-        # still gives one file per value
-        if df.sparkSession.conf.get("spark.sql.adaptive.enabled").lower() == "true":
-            parted = parted.hint("rebalance", "__part")
-        else:
-            parted = parted.repartition("__part")
         parted.write.mode("overwrite").partitionBy("__part").parquet(out)
         parts = {}
         rows = 0
@@ -294,7 +281,9 @@ class Warehouse:
             parts = {UNPARTITIONED: [name]}
         else:
             parts, rows = self._write_partitioned(table, snap, df, partition_by)
-        return self._finish(table, op, rows, meta, snap, parts, df.schema, partition_by)
+        return self._finish(
+            table, op, rows, meta, snap, parts, df.schema.jsonValue(), partition_by
+        )
 
     def append(
         self, table: str, df: DataFrame, partition_by: str | None = None
@@ -305,7 +294,7 @@ class Warehouse:
             return self.overwrite(table, df, op="append", partition_by=partition_by)
         meta = self._load_meta(table)
         entry = self._snapshot_entry(meta, None)
-        schema = _union_schema(self._schema(table, entry), df.schema)
+        schema = _union_schema(StructType.fromJson(entry["schema"]), df.schema)
         snap = self._next_snap(meta)
         parts = {p: list(ds) for p, ds in entry["parts"].items()}
         if partition_by is None:
@@ -317,7 +306,7 @@ class Warehouse:
             for p, ds in new_parts.items():
                 parts.setdefault(p, []).extend(ds)
         return self._finish(
-            table, "append", rows, meta, snap, parts, schema,
+            table, "append", rows, meta, snap, parts, schema.jsonValue(),
             _kept_partition_by(entry, partition_by),
         )
 
@@ -337,15 +326,18 @@ class Warehouse:
 
         With ``partition_by`` (a column of ``df``), only the partitions
         present in the batch are read + rewritten; all other partitions'
-        manifest entries carry over untouched.
+        manifest entries carry over untouched.  Every rewritten partition
+        gets one file (``_clustered``).
         """
         if not self.exists(table):
-            return self.overwrite(table, df, op="merge", partition_by=partition_by)
+            return self.overwrite(
+                table, _clustered(df, partition_by), op="merge", partition_by=partition_by
+            )
         meta = self._load_meta(table)
         entry = self._snapshot_entry(meta, None)
         cur = entry["parts"]
         # before any write: a type change fails here, not at a later read
-        schema = _union_schema(self._schema(table, entry), df.schema)
+        schema = _union_schema(StructType.fromJson(entry["schema"]), df.schema)
         if partition_by is None or UNPARTITIONED in cur:
             # unpartitioned (or one-time migration of a table created
             # unpartitioned): full merge rewrite
@@ -353,7 +345,7 @@ class Warehouse:
             remaining = _anti_join_null_safe(old, df.select(*keys).distinct(), keys)
             return self.overwrite(
                 table,
-                remaining.unionByName(df, allowMissingColumns=True),
+                _clustered(remaining.unionByName(df, allowMissingColumns=True), partition_by),
                 op="merge",
                 partition_by=partition_by,
             )
@@ -399,12 +391,14 @@ class Warehouse:
                 # missing a legacy one) merges cleanly — the Iceberg
                 # add-column path
                 merged = keep.unionByName(df, allowMissingColumns=True)
-            new_parts, rows = self._write_partitioned(table, snap, merged, partition_by)
+            new_parts, rows = self._write_partitioned(
+                table, snap, _clustered(merged, partition_by), partition_by
+            )
         finally:
             df.unpersist()
         parts.update(new_parts)
         return self._finish(
-            table, "merge", rows, meta, snap, parts, schema,
+            table, "merge", rows, meta, snap, parts, schema.jsonValue(),
             _kept_partition_by(entry, partition_by),
         )
 
@@ -422,15 +416,18 @@ class Warehouse:
         over by reference, as in ``append``, and a table with none launches
         no Spark job.  ``rows`` is then the footer count of the carried dirs
         plus the rows written.  The whole table is rewritten instead when it
-        is unpartitioned, when its manifest holds ``UNPARTITIONED`` dirs or
-        predates the recorded partition column (both record
-        ``partition_by`` as ``None`` or not at all), or when
-        ``partition_by`` names another column than the recorded one."""
+        is unpartitioned, when its manifest holds ``UNPARTITIONED`` dirs
+        (recorded ``partition_by`` is then ``None``), or when
+        ``partition_by`` names another column than the recorded one.  Each
+        rewritten partition gets one file (``_clustered``)."""
         meta = self._load_meta(table)
         entry = self._snapshot_entry(meta, None)
-        if partition_by is None or entry.get("partition_by") != partition_by:
+        if partition_by is None or entry["partition_by"] != partition_by:
             return self.overwrite(
-                table, self.read(table), op="compact", partition_by=partition_by
+                table,
+                _clustered(self.read(table), partition_by),
+                op="compact",
+                partition_by=partition_by,
             )
         snap = self._next_snap(meta)
         parts = {p: list(ds) for p, ds in entry["parts"].items()}
@@ -443,12 +440,12 @@ class Warehouse:
         )
         if fragmented:
             new_parts, written = self._write_partitioned(
-                table, snap, self._scan(fragmented, entry), partition_by
+                table, snap, _clustered(self._scan(fragmented, entry), partition_by), partition_by
             )
             parts.update(new_parts)
             rows += written
         return self._finish(
-            table, "compact", rows, meta, snap, parts, self._schema(table, entry), partition_by
+            table, "compact", rows, meta, snap, parts, entry["schema"], partition_by
         )
 
     def partition_keys(self, table: str, snapshot_id: int | None = None) -> list[str]:
@@ -472,9 +469,8 @@ class Warehouse:
             if not (p != UNPARTITIONED and p < before)
         }
         snap = self._next_snap(meta)
-        schema = StructType.fromJson(entry["schema"]) if "schema" in entry else None
         return self._finish(
-            table, "expire_partitions", 0, meta, snap, parts, schema, entry.get("partition_by")
+            table, "expire_partitions", 0, meta, snap, parts, entry["schema"], entry["partition_by"]
         )
 
     def expire_snapshots(self, table: str, keep_last: int = 2) -> list[int]:

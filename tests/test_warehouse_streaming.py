@@ -448,8 +448,9 @@ def test_merge_writes_one_file_per_touched_partition(spark, wh):
 
 
 def test_stream_sink_commit_writes_one_file_per_partition(spark, wh, tmp_path, stream_source):
-    """The sink's first commit writes from the micro-batch frame itself,
-    whose session runs without AQE: still one file per partition dir."""
+    """The sink's first commit creates the table from the micro-batch frame
+    itself, split over the stateful stream's shuffle partitions: still one
+    file per partition dir."""
     import shutil
 
     src_dir, _ = stream_source
@@ -489,6 +490,7 @@ def test_compact_rewrites_only_fragmented_partitions(spark, wh):
     after = wh.snapshots("pt")[-1]["parts"]
     assert {p: after[p] for p in days[1:]} == {p: parts[p] for p in days[1:]}
     assert len(after[days[0]]) == 1 and after[days[0]] != fragmented[days[0]]
+    assert len(_parquet_files(wh, "pt", after[days[0]][0])) == 1
     assert _rows(wh, "pt", s) == 32
     assert sorted(wh.read("pt").collect()) == expected
 
@@ -519,10 +521,8 @@ def test_compact_rewrites_only_fragmented_partitions(spark, wh):
 
 def test_read_takes_schema_from_manifest(spark, wh):
     """Reads take the schema the manifest records: no Spark job, an added
-    column reads as NULL on older partitions, a type change fails at commit,
-    and a snapshot without the recorded schema reads the same rows."""
-    import json
-
+    column reads as NULL on older partitions, and a type change fails at
+    commit."""
     from conftest import _job_count
 
     def batch(days, cols, v=1.0):
@@ -548,18 +548,3 @@ def test_read_takes_schema_from_manifest(spark, wh):
         with pytest.raises(ValueError, match="'v'.*double.*string"):
             op()
     assert wh.snapshots("t") == snaps
-
-    expected = {frozenset(r.asDict().items()) for r in got.collect()}
-    path = os.path.join(wh.root, "t", "metadata.json")
-    with open(path) as f:
-        meta = json.load(f)
-    for s in meta["snapshots"]:
-        del s["schema"], s["partition_by"]
-    with open(path, "w") as f:
-        json.dump(meta, f)
-    assert {frozenset(r.asDict().items()) for r in wh.read("t").collect()} == expected
-    # a compaction of the legacy snapshot rewrites it and records both again
-    wh.compact("t", partition_by="day")
-    snap = wh.snapshots("t")[-1]
-    assert snap["partition_by"] == "day" and "schema" in snap
-    assert {frozenset(r.asDict().items()) for r in wh.read("t").collect()} == expected
