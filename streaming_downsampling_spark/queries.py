@@ -30,6 +30,7 @@ from .operators.downsample import (
 from .operators.gapfill import gapfill
 from .operators.multimodal import extract_features, frame_sample_plan, synth_media
 from .operators.rollup import cascade, rollup
+from .streaming.jobs import refresh_tier_cascade, stream_partitions
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -770,19 +771,16 @@ SELECT event_type, rn, event_id, value FROM (
 def _run_to_memory_sink(spark, out, name, mode="update", state_parts="16"):
     """The memory-sink lifecycle shared by EVERY bounded-stream catalog
     drive (it was copy-pasted into each stream query before): replace any
-    previous run of the same name, cap the state-store partition count for
-    the duration (fixed per checkpoint at first start; a fresh temp
+    previous run of the same name, start with the state-store partition
+    count capped (fixed per checkpoint at first start; a fresh temp
     checkpoint per call means the cap applies cleanly — 32+ partitions
     just multiply tiny checkpoint files per micro-batch), run to
-    completion with a hard timeout, restore the conf, return the
-    emissions table."""
+    completion with a hard timeout, return the emissions table."""
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
     spark.catalog.dropTempView(name)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_parts)
-    try:
+    with stream_partitions(spark, state_parts):
         q = (
             out.writeStream.format("memory")
             .queryName(name)
@@ -790,14 +788,12 @@ def _run_to_memory_sink(spark, out, name, mode="update", state_parts="16"):
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                f"bounded stream {name!r} did not finish within 600s — "
-                "refusing to read a partial memory sink"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError(
+            f"bounded stream {name!r} did not finish within 600s — "
+            "refusing to read a partial memory sink"
+        )
     return spark.table(name)
 
 
@@ -3711,7 +3707,6 @@ def q_stream_tier_cascade(spark, sf_dir):
     import shutil
 
     from .sources.tables import Warehouse
-    from .streaming.jobs import refresh_tier_cascade
 
     ev, stream = _timed_batch_stream(spark, sf_dir, "cascade")
     root = f"/tmp/sds_whcas_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}"
@@ -3751,9 +3746,7 @@ def q_stream_tier_cascade(spark, sf_dir):
             )
         b.unpersist()
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with stream_partitions(spark, 8):
         q = (
             agg.writeStream.outputMode("append")
             .option("checkpointLocation", f"{root}/ckpt")
@@ -3761,11 +3754,9 @@ def q_stream_tier_cascade(spark, sf_dir):
             .foreachBatch(sink)
             .start()
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("stream_tier_cascade did not finish within 600s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError("stream_tier_cascade did not finish within 600s")
     refresh_tier_cascade(spark, wh, "tier_1h", "tier_1d", to_tier="1d")
     return wh.read("tier_1d").select(
         "key",

@@ -17,17 +17,45 @@ streaming path is first-class:
 
 ``run_tier_stream`` uses ``Trigger.AvailableNow`` so tests/benches run it as
 a bounded job; a production deployment passes ``trigger=processingTime``.
+
+State partitions: a stateful query's partition count is
+``spark.sql.shuffle.partitions`` at its first ``start()``, and Spark records
+it in the checkpoint's offset log, so it is fixed per checkpoint for good and
+every restart restores it.  ``run_tier_stream`` starts a fresh checkpoint
+with :data:`TIER_STREAM_PARTITIONS` = 1 (:func:`stream_partitions` scopes the
+value to that one ``start()``); checkpoints written before keep the count
+they recorded.
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.rollup import tier_interval
 from ..plans.lineage import LineageLog
 from ..sources.tables import Warehouse
+
+# State partitions of a fresh tier-stream checkpoint (see run_tier_stream)
+TIER_STREAM_PARTITIONS = 1
+
+
+@contextmanager
+def stream_partitions(spark: SparkSession, n):
+    """Set ``spark.sql.shuffle.partitions`` to ``n`` on ``spark`` for the
+    body (a streaming query's ``start()``) and restore it in ``finally``.
+
+    ``start()`` clones the session, so the query keeps ``n`` (and a fresh
+    checkpoint records it as its state partition count) while the caller's
+    session reads its own value again afterwards."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def tier_agg_stream(
@@ -178,6 +206,22 @@ def run_tier_stream(
     to the source seam and REQUIRES an explicit ``schema`` (there is no
     file feed to infer one from — a Kafka value blob carries no schema).
     Returns run stats.
+
+    The query starts with ``spark.sql.shuffle.partitions`` =
+    :data:`TIER_STREAM_PARTITIONS` (1), scoped to its ``start()``; the
+    caller's session keeps its own value.  One partition holds the windowed
+    state and runs each MERGE shuffle of the sink (Spark turns AQE off in a
+    stream's session, so nothing coalesces them).  The cost of a state
+    partition is per partition, not per row: each micro-batch commits a
+    delta file, a checksum and their ``.crc`` files per partition, and the
+    state holds only the windows inside the watermark (about 150 rows after
+    a 1,000-turn trigger), so 8 partitions cost about ten times the task
+    time of 1.
+    The count is recorded in the checkpoint at its first batch and fixed for
+    good: a checkpoint created with another count keeps it on every resume.
+    A stream whose watermark holds far more state than one task can commit
+    per trigger would need a new checkpoint with more partitions, sized on a
+    benchmark workload of that shape.
     """
     if schema is None:
         if source_format == "kafka":
@@ -227,13 +271,14 @@ def run_tier_stream(
         stats["batches"] += 1
         stats["rows_merged"] += n
 
-    q = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(sink)
-        .start()
-    )
+    with stream_partitions(spark, TIER_STREAM_PARTITIONS):
+        q = (
+            agg.writeStream.outputMode("update")
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .foreachBatch(sink)
+            .start()
+        )
     return _finish_stream(spark, q, log, stats)
 
 

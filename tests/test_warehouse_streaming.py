@@ -2,11 +2,14 @@
 
 import glob
 import os
+import threading
+from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from streaming_downsampling_spark.datagen import generate_transcripts
 from streaming_downsampling_spark.operators.rollup import rollup, with_signal
@@ -548,3 +551,157 @@ def test_read_takes_schema_from_manifest(spark, wh):
         with pytest.raises(ValueError, match="'v'.*double.*string"):
             op()
     assert wh.snapshots("t") == snaps
+
+
+class _StateParts(StreamingQueryListener):
+    """``numShufflePartitions`` of every stateful operator in each progress
+    event, until the query terminates."""
+
+    def __init__(self):
+        self.parts: list[int] = []
+        self.done = threading.Event()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.parts += [s.numShufflePartitions for s in event.progress.stateOperators]
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.done.set()
+
+
+@contextmanager
+def _state_parts(spark):
+    """The state partition counts the queries started in the body report."""
+    listener = _StateParts()
+    spark.streams.addListener(listener)
+    try:
+        yield listener.parts
+        assert listener.done.wait(60), "no query-terminated event"
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def _recorded_parts(ckpt):
+    """``spark.sql.shuffle.partitions`` as the checkpoint's newest offset
+    file records it (line 2 is the batch metadata, with its ``conf``)."""
+    import json
+
+    newest = max(int(f) for f in os.listdir(os.path.join(ckpt, "offsets")) if f.isdigit())
+    with open(os.path.join(ckpt, "offsets", str(newest))) as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]["spark.sql.shuffle.partitions"]
+
+
+def _tier_1m(df):
+    return (
+        df.select("key", "window_start", "n_points", "sum_value", "min_value", "max_value")
+        .orderBy("key", "window_start")
+        .toPandas()
+    )
+
+
+def test_fresh_tier_stream_keeps_state_in_one_partition(spark, wh, tmp_path, stream_source, monkeypatch):
+    """A fresh checkpoint records one state partition, the progress events
+    report one, and the caller's ``spark.sql.shuffle.partitions`` is the
+    same afterwards, also when ``start()`` raises."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    src_dir, _ = stream_source
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "1"
+    ckpt = str(tmp_path / "ck_one")
+    with _state_parts(spark) as parts:
+        stats = run_tier_stream(
+            spark, src_dir, ckpt, wh, table="r1m_one", tier="1m", watermark="3650 days",
+            max_files_per_trigger=3,
+        )
+    assert stats["batches"] >= 2 and stats["rows_merged"] > 0
+    assert _recorded_parts(ckpt) == "1"
+    assert parts and set(parts) == {1}
+    assert spark.conf.get(key) == before
+
+    def boom(self, *a, **k):
+        raise RuntimeError("start failed")
+
+    monkeypatch.setattr(DataStreamWriter, "start", boom)
+    with pytest.raises(RuntimeError, match="start failed"):
+        run_tier_stream(spark, src_dir, str(tmp_path / "ck_raise"), wh, table="r1m_raise")
+    assert spark.conf.get(key) == before
+
+
+def test_resumed_tier_stream_keeps_recorded_partitions(spark, wh, tmp_path, stream_source, monkeypatch):
+    """A checkpoint first run with 8 state partitions (as every checkpoint
+    written before the one-partition default) resumes with 8, and the tier
+    still equals batch ``rollup``."""
+    import shutil
+
+    from streaming_downsampling_spark.streaming import jobs
+
+    src_dir, tbl = stream_source
+    files = sorted(glob.glob(f"{src_dir}/*.parquet"))
+    live = tmp_path / "live_src"
+    os.makedirs(live)
+    for f in files[:3]:
+        shutil.copy(f, live)
+    ckpt = str(tmp_path / "ck_eight")
+    kw = dict(table="r1m_eight", tier="1m", watermark="3650 days")
+    monkeypatch.setattr(jobs, "TIER_STREAM_PARTITIONS", 8, raising=False)
+    run_tier_stream(spark, str(live), ckpt, wh, **kw)
+    assert _recorded_parts(ckpt) == "8"
+    monkeypatch.undo()
+
+    for f in files[3:]:
+        shutil.copy(f, live)
+    with _state_parts(spark) as parts:
+        stats = run_tier_stream(spark, str(live), ckpt, wh, **kw)
+    assert stats["rows_merged"] > 0
+    assert parts and set(parts) == {8}
+    assert _recorded_parts(ckpt) == "8"
+    import pandas as pd
+
+    exp = rollup(with_signal(spark.createDataFrame(tbl.to_pandas())), "1m")
+    pd.testing.assert_frame_equal(_tier_1m(wh.read("r1m_eight")), _tier_1m(exp), check_exact=True)
+
+
+def test_tier_stream_late_rows_across_restarts(spark, wh, tmp_path):
+    """Watermark semantics across AvailableNow restarts: the no-data
+    micro-batch that ends each run advances the watermark, so a row older
+    than it in the next run is dropped and its window keeps its count."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 3, 1, 12, 0, tzinfo=dt.timezone.utc)
+    minute = dt.timedelta(minutes=1)
+    src = tmp_path / "late_src"
+    os.makedirs(src)
+
+    def put(name, minutes):
+        ts = [t0 + m * minute for m in minutes]
+        pq.write_table(
+            pa.table(
+                {
+                    "conv_id": ["c"] * len(ts),
+                    "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+                    "text": ["x" * (5 + m) for m in minutes],
+                }
+            ),
+            str(src / f"{name}.parquet"),
+        )
+
+    ckpt = str(tmp_path / "ck_late")
+    got = []
+    # the late row sits 25 minutes before the first file's newest row (30)
+    for name, minutes in [("a", range(31)), ("b", [5, 31, 32]), ("c", [4, 33])]:
+        put(name, minutes)
+        stats = run_tier_stream(
+            spark, str(src), ckpt, wh, table="r1m_late", tier="1m", watermark="10 minutes"
+        )
+        got.append((stats["batches"], stats["rows_merged"], stats["late_rows_dropped"]))
+    assert got == [(2, 31, 0), (2, 2, 1), (2, 1, 1)]
+    n = {r["window_start"]: r["n_points"] for r in wh.read("r1m_late").collect()}
+    assert len(n) == 34 and set(n.values()) == {1}
+    assert n[(t0 + 5 * minute).replace(tzinfo=None)] == 1
