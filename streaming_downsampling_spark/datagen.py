@@ -12,8 +12,8 @@ Deterministic: NumPy PCG64 with a fixed seed; the same (seed, sf) always
 produces bit-identical tables, which is what lets the end-to-end tests
 compare Spark output against the single-process numpy oracle exactly.
 
-Skew knob: 1 % of conversations get 100× the turns (exercises the salted
-``applyInPandas`` path).  Gaps: heavy-tailed jitter plus 2–5 % deliberately
+Skew knob: 1 % of conversations get 100× the turns (exercises the model
+kernel's 200-point segmentation).  Gaps: heavy-tailed jitter plus 2–5 % deliberately
 dropped intervals (exercises gap-fill).
 """
 

@@ -8,41 +8,18 @@ Gorilla/delta-of-delta chunk compression for the retention tiers, so this is
 new machinery, bit-compatible round-trip tested (float64 bit-pattern
 equality).
 
-Encoding runs once per (conv_id, window) chunk inside ``applyInPandas`` —
-chunks are bounded (one retention window), so the per-value Python loop here
-is over at most a few thousand points per Arrow batch group, outside the
-per-row Spark path.  Deviations from the paper, chosen for µs-resolution
-int64 timestamps: first delta is 64-bit, and the final delta-of-delta bucket
-is 64-bit (paper: 14-bit first delta / 32-bit bucket).
+Both streams are encoded and decoded batched: one call covers every
+(conv_id, window) chunk of a sorted frame in whole-array numpy, one blob per
+chunk, so the only per-record Python left is the decoders' start-chain walk.
+One chunk is the one-group batch (``encode_*_batched(x, [0, len(x)])[0]``,
+``decode_*_batched([blob])``).  Deviations from the paper, chosen for
+µs-resolution int64 timestamps: first delta is 64-bit, and the final
+delta-of-delta bucket is 64-bit (paper: 14-bit first delta / 32-bit bucket).
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-
-class _BitWriter:
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        if nbits == 0:
-            return
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.nbits += nbits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def getvalue(self) -> bytes:
-        if self.nbits:
-            return bytes(self.buf) + bytes([(self.acc << (8 - self.nbits)) & 0xFF])
-        return bytes(self.buf)
 
 
 class _BitReader:
@@ -91,8 +68,8 @@ def _pack_segments(vals: np.ndarray, nbits: np.ndarray) -> bytes:
 
     Each segment is ``nbits[i]`` (1..64) low bits of ``vals[i]``, written
     MSB-first back-to-back.  Works in uint64 words: every segment touches at
-    most two consecutive words, so packing is two ``bitwise_or.at`` scatters
-    over the whole array — no per-value Python.
+    most two consecutive words, so packing is two scatter-ORs over the whole
+    array — no per-value Python.
     """
     vals = vals.astype(np.uint64, copy=False)
     nbits = nbits.astype(np.uint64, copy=False)
@@ -134,57 +111,13 @@ def _scatter_or(words: np.ndarray, w: np.ndarray, v: np.ndarray) -> None:
     words[w[run0]] |= np.bitwise_or.reduceat(v, run0)
 
 
-def encode_timestamps(ts: np.ndarray) -> bytes:
-    """Delta-of-delta encode int64 timestamps (µs) — fully vectorized.
-
-    Same bit format the scalar reference implementation wrote (and
-    :func:`decode_timestamps` reads); control+payload for each in-range
-    bucket is emitted as one fused segment, out-of-range delta-of-deltas as
-    a 4-bit control segment plus a 64-bit raw segment.
-    """
-    ts = np.asarray(ts, dtype=np.int64)
-    n = len(ts)
-    head_v = [np.uint64(n)]
-    head_b = [np.uint64(32)]
-    if n >= 1:
-        head_v.append(ts[0].astype(np.uint64) if hasattr(ts[0], "astype") else np.uint64(ts[0] % (1 << 64)))
-        head_b.append(np.uint64(64))
-    if n >= 2:
-        deltas = np.diff(ts)
-        head_v.append(deltas[0].astype(np.uint64))
-        head_b.append(np.uint64(64))
-    if n <= 2:
-        return _pack_segments(np.array(head_v, dtype=np.uint64), np.array(head_b, dtype=np.uint64))
-    dods = np.diff(deltas)
-    m = len(dods)
-    seg_v = np.zeros((m, 2), dtype=np.uint64)
-    seg_b = np.zeros((m, 2), dtype=np.uint64)
-    done = dods == 0
-    seg_b[done, 0] = 1  # control '0', value 0
-    for ctrl, cbits, pbits, lo, hi in _DOD_BUCKETS:
-        sel = (~done) & (dods >= lo) & (dods <= hi)
-        seg_v[sel, 0] = (np.uint64(ctrl) << np.uint64(pbits)) | (
-            (dods[sel] - lo).astype(np.uint64)
-        )
-        seg_b[sel, 0] = cbits + pbits
-        done |= sel
-    big = ~done
-    seg_v[big, 0] = 0b1111
-    seg_b[big, 0] = 4
-    seg_v[big, 1] = dods[big].astype(np.uint64)
-    seg_b[big, 1] = 64
-    vals = np.concatenate([np.array(head_v, dtype=np.uint64), seg_v.ravel()])
-    bits = np.concatenate([np.array(head_b, dtype=np.uint64), seg_b.ravel()])
-    return _pack_segments(vals, bits)
-
-
 # ---------------------------------------------------------------------------
 # vectorized decode machinery
 #
 # Decoding a variable-length bitstream looks inherently sequential: record
 # i+1 starts where record i ends.  But every record's LENGTH is a pure
-# function of a few bits at its own start (no inter-record state — see
-# encode_values), so decode splits into:
+# function of a few bits at its own start (no inter-record state: the
+# value encoder writes only '0' and '11' records), so decode splits into:
 #   (a) a candidate length L[p] for EVERY bit position p — whole-array
 #       uint8 arithmetic over the unpacked bits (bandwidth-trivial);
 #   (b) the start chain p₀ → p₀+L[p₀] → … — a tight Python loop over a
@@ -197,15 +130,6 @@ def encode_timestamps(ts: np.ndarray) -> bytes:
 # path out of the interpreter for everything except the 1-add-per-record
 # chain.
 # ---------------------------------------------------------------------------
-
-
-def _bit_array(blob: bytes, pad_bits: int) -> tuple[np.ndarray, np.ndarray]:
-    """(bit array padded with zeros, byte array padded for 9-byte windows)."""
-    raw = np.frombuffer(blob, dtype=np.uint8)
-    bits = np.unpackbits(raw)
-    bits = np.concatenate([bits, np.zeros(pad_bits, dtype=np.uint8)])
-    padded = np.concatenate([raw, np.zeros(16, dtype=np.uint8)])
-    return bits, padded
 
 
 def _extract_bits(padded: np.ndarray, q: np.ndarray, width) -> np.ndarray:
@@ -290,129 +214,10 @@ def _xor_lengths(bits: np.ndarray, real_bits: int) -> bytes:
     return L.tobytes()
 
 
-def _decode_timestamps_scalar(blob: bytes) -> np.ndarray:
-    r = _BitReader(blob)
-    n = r.read(32)
-    out = np.empty(n, dtype=np.int64)
-    if n == 0:
-        return out
-    first = r.read(64)
-    out[0] = np.int64(np.uint64(first))
-    if n == 1:
-        return out
-    delta = r.read(64)
-    delta = delta - (1 << 64) if delta >= (1 << 63) else delta
-    out[1] = out[0] + delta
-    for i in range(2, n):
-        if r.read(1) == 0:
-            dod = 0
-        else:
-            if r.read(1) == 0:  # '10'
-                dod = r.read(7) - 63
-            elif r.read(1) == 0:  # '110'
-                dod = r.read(9) - 255
-            elif r.read(1) == 0:  # '1110'
-                dod = r.read(12) - 2047
-            else:  # '1111'
-                dod = r.read(64)
-                dod = dod - (1 << 64) if dod >= (1 << 63) else dod
-        delta += dod
-        out[i] = out[i - 1] + delta
-    return out
-
-
-def decode_timestamps(blob: bytes) -> np.ndarray:
-    """Vectorized delta-of-delta decode (same bit format as the scalar
-    reader, bit-exact — tests assert equality on random round-trips)."""
-    r = _BitReader(blob)
-    n = r.read(32)
-    if n <= 2:
-        return _decode_timestamps_scalar(blob)
-    first = np.uint64(r.read(64)).astype(np.int64)
-    d1 = r.read(64)
-    d1 = d1 - (1 << 64) if d1 >= (1 << 63) else d1
-    m = n - 2
-    bits, padded = _bit_array(blob, pad_bits=80)
-    ltab = _dod_lengths(bits, 8 * len(blob))
-    starts = _start_chain(ltab, 160, m)  # header = 32 + 64 + 64 bits
-    t1 = bits[starts]
-    t2 = bits[starts + 1]
-    t3 = bits[starts + 2]
-    t4 = bits[starts + 3]
-    dods = np.zeros(m, dtype=np.int64)
-    sel = (t1 == 1) & (t2 == 0)  # '10' + 7 bits, bias -63
-    if sel.any():
-        dods[sel] = _extract_bits(padded, starts[sel] + 2, 7).astype(np.int64) - 63
-    sel = (t1 == 1) & (t2 == 1) & (t3 == 0)  # '110' + 9, bias -255
-    if sel.any():
-        dods[sel] = _extract_bits(padded, starts[sel] + 3, 9).astype(np.int64) - 255
-    sel = (t1 == 1) & (t2 == 1) & (t3 == 1) & (t4 == 0)  # '1110' + 12, -2047
-    if sel.any():
-        dods[sel] = _extract_bits(padded, starts[sel] + 4, 12).astype(np.int64) - 2047
-    sel = (t1 == 1) & (t2 == 1) & (t3 == 1) & (t4 == 1)  # '1111' + raw 64
-    if sel.any():
-        dods[sel] = _extract_bits(padded, starts[sel] + 4, 64).view(np.int64)
-    deltas = np.empty(n - 1, dtype=np.int64)
-    deltas[0] = d1
-    deltas[1:] = d1 + np.cumsum(dods)
-    out = np.empty(n, dtype=np.int64)
-    out[0] = first
-    out[1:] = first + np.cumsum(deltas)
-    return out
-
-
-def encode_values(values: np.ndarray) -> bytes:
-    """Gorilla XOR-encode float64 values (§4.1.2) — fully vectorized.
-
-    Every non-zero XOR is written as a '11' (new-window) record: 2-bit
-    control, 5-bit leading-zero count, 6-bit significant-length-minus-one,
-    then the significant bits.  The paper's '10' (reuse previous window)
-    record trades those 11 header bits for a sequential dependency between
-    values; dropping it keeps the stream decodable by the same reader
-    (:func:`decode_values` handles both controls) while making encode a
-    handful of whole-array numpy ops — ~20x faster, which matters at 10^12
-    points.  Zero XORs still cost 1 bit, so constant runs compress the same.
-    """
-    bits = np.ascontiguousarray(values, dtype=np.float64).view(np.uint64)
-    n = len(bits)
-    head_v = [np.uint64(n)]
-    head_b = [np.uint64(32)]
-    if n >= 1:
-        head_v.append(bits[0])
-        head_b.append(np.uint64(64))
-    if n <= 1:
-        return _pack_segments(
-            np.array(head_v, dtype=np.uint64), np.array(head_b, dtype=np.uint64)
-        )
-    xors = bits[1:] ^ bits[:-1]
-    m = len(xors)
-    nz = xors != 0
-    lead = np.minimum(_U64(64) - _bitlen64(xors), _U64(31))
-    trail = np.where(nz, _bitlen64(xors & (~xors + _ONE)) - _ONE, _U64(0))
-    sig = _U64(64) - lead - trail
-    payload = xors >> trail
-    header = (
-        (_U64(0b11) << _U64(11)) | (lead << _U64(6)) | (sig - _ONE)
-    )  # 13 bits
-    seg_v = np.zeros((m, 2), dtype=np.uint64)
-    seg_b = np.zeros((m, 2), dtype=np.uint64)
-    seg_b[~nz, 0] = 1  # control '0'
-    fused = nz & (sig <= 51)  # 13 + sig <= 64: header and payload in one word
-    seg_v[fused, 0] = (header[fused] << sig[fused]) | payload[fused]
-    seg_b[fused, 0] = _U64(13) + sig[fused]
-    split = nz & ~fused
-    seg_v[split, 0] = header[split]
-    seg_b[split, 0] = 13
-    seg_v[split, 1] = payload[split]
-    seg_b[split, 1] = sig[split]
-    vals = np.concatenate([np.array(head_v, dtype=np.uint64), seg_v.ravel()])
-    nbits = np.concatenate([np.array(head_b, dtype=np.uint64), seg_b.ravel()])
-    return _pack_segments(vals, nbits)
-
-
 def _decode_values_scalar(blob: bytes) -> np.ndarray:
-    """Scalar reader — handles the paper's '10' window-reuse records too
-    (kept for foreign/legacy streams; our encoder emits only '0'/'11')."""
+    """Scalar XOR reader that also handles the paper's '10' window-reuse
+    records: :func:`decode_values_batched` decodes a blob holding one through
+    this (foreign/legacy streams; our encoder writes only '0'/'11')."""
     r = _BitReader(blob)
     n = r.read(32)
     out = np.empty(n, dtype=np.uint64)
@@ -435,56 +240,19 @@ def _decode_values_scalar(blob: bytes) -> np.ndarray:
     return out.view(np.float64)
 
 
-def decode_values(blob: bytes) -> np.ndarray:
-    """Vectorized XOR decode for '0'/'11' streams (what encode_values
-    writes); falls back to the scalar reader if a '10' window-reuse record
-    is present.  Bit-exact with the scalar path (tests assert float64
-    bit-pattern equality)."""
-    r = _BitReader(blob)
-    n = r.read(32)
-    if n <= 1:
-        return _decode_values_scalar(blob)
-    first = np.uint64(r.read(64))
-    m = n - 1
-    bits, padded = _bit_array(blob, pad_bits=96)
-    starts = _start_chain(_xor_lengths(bits, 8 * len(blob)), 96, m)  # header 32 + 64
-    nz = bits[starts] == 1
-    if (nz & (bits[starts + 1] == 0)).any():  # '10' record → legacy stream
-        return _decode_values_scalar(blob)
-    xors = np.zeros(m, dtype=np.uint64)
-    if nz.any():
-        s_nz = starts[nz]
-        hdr = _extract_bits(padded, s_nz, 13)  # '11' + 5 lead + 6 (sig-1)
-        lead = (hdr >> np.uint64(6)) & np.uint64(31)
-        sig = (hdr & np.uint64(63)) + np.uint64(1)
-        trail = np.uint64(64) - lead - sig
-        payload = _extract_bits(padded, s_nz + 13, sig)
-        xors[nz] = payload << trail
-    out = np.empty(n, dtype=np.uint64)
-    out[0] = first
-    np.bitwise_xor.accumulate(
-        np.concatenate([[first], xors]), out=out
-    )
-    return out.view(np.float64)
-
-
-def encode_chunk(ts: np.ndarray, values: np.ndarray) -> tuple[bytes, bytes]:
-    return encode_timestamps(ts), encode_values(values)
-
-
 # ---------------------------------------------------------------------------
 # batched encode: many chunks, ONE _pack_segments call per stream
 #
-# Per-chunk encode is ~30 whole-array numpy ops; for the engine's real group
-# shapes (thousands of 40-400-point groups per Arrow batch) the numpy
-# dispatch overhead dwarfs the arithmetic.  The batched encoders build the
-# (value, nbits) segment arrays for EVERY chunk of a sorted frame in one
-# vectorized pass — per-chunk head segments scattered between the global
+# Encoding one chunk at a time costs ~30 whole-array numpy ops per chunk; for
+# the engine's real group shapes (thousands of 40-400-point groups per Arrow
+# batch) the numpy dispatch overhead dwarfs the arithmetic.  The encoders
+# build the (value, nbits) segment arrays for EVERY chunk of a sorted frame in
+# one vectorized pass — per-chunk head segments scattered between the global
 # delta-of-delta/XOR segments — pad each chunk's bit stream to a byte
-# boundary with an explicit zero-bit segment (bit-identical to the zero
-# padding _BitWriter.getvalue emits), pack ONCE, and slice per-chunk blobs
-# out of the packed buffer by byte offset.  Tests assert bytes-equality with
-# the per-chunk encoders on randomized group sets.
+# boundary with an explicit zero-bit segment, pack ONCE, and slice per-chunk
+# blobs out of the packed buffer by byte offset.  Tests pin the bytes (the
+# sha256 of a seeded group set, exact bytes for every record kind) and decode
+# every blob with a scalar bit reader.
 # ---------------------------------------------------------------------------
 
 
@@ -544,8 +312,14 @@ def _assemble_and_pack(
 
 
 def encode_timestamps_batched(ts: np.ndarray, bounds: np.ndarray) -> list[bytes]:
-    """Delta-of-delta encode every ``ts[bounds[g]:bounds[g+1]]`` chunk —
-    bytes-identical to per-chunk :func:`encode_timestamps`."""
+    """Delta-of-delta encode every ``ts[bounds[g]:bounds[g+1]]`` chunk of
+    int64 timestamps (µs), one blob per chunk.
+
+    A blob is a 32-bit count, the first timestamp and the first delta (64
+    bits each, when present), then one record per delta-of-delta: control
+    and payload of each in-range bucket as one fused segment, an
+    out-of-range delta-of-delta as a 4-bit '1111' control plus a 64-bit raw
+    segment; zero bits pad the blob to a byte boundary."""
     ts = np.asarray(ts, dtype=np.int64)
     a = np.asarray(bounds[:-1], dtype=np.int64)
     b = np.asarray(bounds[1:], dtype=np.int64)
@@ -630,10 +404,9 @@ def _seg_cumsum_pick(
 def decode_timestamps_batched(blobs: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
     """Decode MANY delta-of-delta blobs in one vectorized pass.
 
-    Returns ``(concatenated int64 timestamps, per-blob counts)`` — value-
-    identical to per-blob :func:`decode_timestamps` (tested bit-for-bit).
-    The only per-record Python is the same one-add start chain, now run
-    once per blob over one global length table."""
+    Returns ``(concatenated int64 timestamps, per-blob counts)``.  The only
+    per-record Python is the one-add start chain, run once per blob over one
+    global length table."""
     G = len(blobs)
     if G == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
@@ -735,8 +508,18 @@ def decode_values_batched(blobs: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
 
 
 def encode_values_batched(values: np.ndarray, bounds: np.ndarray) -> list[bytes]:
-    """XOR-encode every ``values[bounds[g]:bounds[g+1]]`` chunk —
-    bytes-identical to per-chunk :func:`encode_values`."""
+    """Gorilla XOR-encode (§4.1.2) every ``values[bounds[g]:bounds[g+1]]``
+    chunk of float64 values, one blob per chunk.
+
+    A blob is a 32-bit count and the first value's 64 bits, then one record
+    per XOR with the previous value: '0' for a zero XOR, otherwise a '11'
+    (new-window) record — 2-bit control, 5-bit leading-zero count, 6-bit
+    significant-length-minus-one, then the significant bits.  The paper's
+    '10' (reuse previous window) record trades those 11 header bits for a
+    sequential dependency between values; dropping it keeps every record's
+    length readable from its own first bits, so both encode and decode stay
+    whole-array numpy (:func:`decode_values_batched` still reads '10'
+    records from other writers).  Constant runs still cost 1 bit a value."""
     bits_all = np.ascontiguousarray(values, dtype=np.float64).view(np.uint64)
     a = np.asarray(bounds[:-1], dtype=np.int64)
     b = np.asarray(bounds[1:], dtype=np.int64)
@@ -771,7 +554,3 @@ def encode_values_batched(values: np.ndarray, bounds: np.ndarray) -> list[bytes]
     seg_v[split, 1] = payload[split]
     seg_b[split, 1] = sig[split]
     return _assemble_and_pack(head_v, head_b, seg_v, seg_b, m)
-
-
-def decode_chunk(ts_blob: bytes, val_blob: bytes) -> tuple[np.ndarray, np.ndarray]:
-    return decode_timestamps(ts_blob), decode_values(val_blob)

@@ -231,7 +231,7 @@ def wavelet_threshold_indices(
 
 def segment_bounds(n: int, max_seg: int) -> list[tuple[int, int]]:
     """THE model pipeline's segmentation rule, in exactly one place —
-    shared by :func:`model_downsample` and the ``attention_scores``
+    shared by :func:`model_downsample_groups` and the ``attention_scores``
     oracle seam (operators/downsample.py), whose validity depends on
     segmenting identically: a group of ``n <= max_seg`` points runs WHOLE
     (even length 0/1); longer groups chop at ``max_seg`` and a trailing
@@ -248,6 +248,93 @@ def segment_bounds(n: int, max_seg: int) -> list[tuple[int, int]]:
     return out
 
 
+def group_segments(
+    bounds, max_seg: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`segment_bounds` of every group ``[bounds[g], bounds[g+1])``,
+    flattened in group order: ``(start, stop, group, ordinal)`` arrays with
+    one entry per segment, ``start``/``stop`` offsets into the whole series
+    and ``ordinal`` the segment's position inside its group."""
+    bounds = np.asarray(bounds, dtype=np.int64).tolist()
+    segs = [
+        (a + s, a + e, g, si)
+        for g, (a, b) in enumerate(zip(bounds[:-1], bounds[1:]))
+        for si, (s, e) in enumerate(segment_bounds(b - a, max_seg))
+    ]
+    start, stop, group, ordinal = np.array(segs, dtype=np.int64).reshape(-1, 4).T
+    return start, stop, group, ordinal
+
+
+def length_buckets(x: np.ndarray, start: np.ndarray, stop: np.ndarray):
+    """Yield ``(segment ids, (S, n) matrix of their values)`` once per
+    distinct segment length ``n``, ascending — the shape the batched kernels
+    take, so each length costs one numpy call chain however many groups
+    share it."""
+    lens = stop - start
+    for n in np.unique(lens):
+        ids = np.flatnonzero(lens == n)
+        yield ids, x[start[ids, None] + np.arange(n)]
+
+
+def model_downsample_groups(
+    x: np.ndarray,
+    bounds,
+    wavelet: str = "db4",
+    approx_ds_factor: int = 2,
+    retention: float = 0.8,
+    seed: int = 42,
+    max_seg: int = 200,
+    weights=None,
+) -> tuple[list, list, list]:
+    """The reference *model* pipeline on every group ``x[bounds[g]:bounds[g+1]]``,
+    deterministic numpy:
+
+    DWT → avg-pool the approximation (stride == ksize == factor, VALID
+    padding; /root/reference/core/downsampling_algorithm2.py:304-315) →
+    attention-importance top-k over the detail coefficients
+    (:94-120, k = max(1, round(len_cD * retention)), indices sorted).
+    Returns per-group lists ``(pooled_cA, selected_cD, detail_indices)``.
+
+    The learned transformer is replaced by a frozen deterministic attention
+    scorer (see :func:`attention_importance_batch`) — same selection
+    semantics, no TF dependency.
+
+    Groups longer than ``max_seg`` (default 200 — the reference's
+    ``original_length``, /root/reference/main.py:106) are processed in
+    :func:`segment_bounds` segments and the outputs concatenated, each
+    segment's detail indices offset by the detail lengths of the segments
+    before it.  The reference model
+    only ever sees fixed-length-200 inputs (it truncates/pads,
+    /root/reference/main.py:44-48), so segmentation preserves its semantics
+    while bounding the O(n²) attention — without it, one 100×-long skewed
+    conversation turns a window group into a multi-second, GB-scale kernel
+    call (the skew hazard SURVEY.md §7.3 flags).  The segments of all groups
+    are bucketed by length and each bucket runs through
+    :func:`model_downsample_batch` once.
+    """
+    x = np.asarray(x, dtype=np.float64)
+    start, stop, _, ordinal = group_segments(bounds, max_seg)
+    # a group's detail indices run over its segments' concatenated cD:
+    # offset each segment by the cD lengths of the group's earlier segments
+    cd_len = wv.coeff_length(stop - start, wavelet, 1)
+    cd_start = np.cumsum(cd_len) - cd_len
+    cd_off = cd_start - cd_start[np.arange(len(start)) - ordinal]
+    segs: list = [None] * len(start)
+    for ids, X in length_buckets(x, start, stop):
+        pooled, sel, idx = model_downsample_batch(
+            X, wavelet, approx_ds_factor, retention, seed, weights
+        )
+        idx += cd_off[ids, None]
+        for j, s in enumerate(ids.tolist()):
+            segs[s] = (pooled[j], sel[j], idx[j])
+    first = np.flatnonzero(ordinal == 0).tolist()
+    out = [
+        segs[a] if b - a == 1 else tuple(map(np.concatenate, zip(*segs[a:b])))
+        for a, b in zip(first, first[1:] + [len(segs)])
+    ]
+    return [o[0] for o in out], [o[1] for o in out], [o[2] for o in out]
+
+
 def model_downsample(
     x: np.ndarray,
     wavelet: str = "db4",
@@ -257,69 +344,12 @@ def model_downsample(
     max_seg: int = 200,
     weights=None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The reference *model* pipeline on one series, deterministic numpy:
-
-    DWT → avg-pool the approximation (stride == ksize == factor, VALID
-    padding; /root/reference/core/downsampling_algorithm2.py:304-315) →
-    attention-importance top-k over the detail coefficients
-    (:94-120, k = max(1, round(len_cD * retention)), indices sorted) →
-    output ``(pooled_cA, selected_cD, detail_indices)``.
-
-    The learned transformer is replaced by a frozen deterministic attention
-    scorer (see :func:`attention_importance`) — same selection semantics,
-    no TF dependency.
-
-    Series longer than ``max_seg`` (default 200 — the reference's
-    ``original_length``, /root/reference/main.py:106) are processed in
-    segments and the outputs
-    concatenated (detail indices offset per segment).  The reference model
-    only ever sees fixed-length-200 inputs (it truncates/pads,
-    /root/reference/main.py:44-48), so segmentation preserves its semantics
-    while bounding the O(n²) attention — without it, one 100×-long skewed
-    conversation turns a window group into a multi-second, GB-scale kernel
-    call (the skew hazard SURVEY.md §7.3 flags).
-    """
-    x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    if n <= max_seg:
-        return _model_downsample_seg(
-            x, wavelet, approx_ds_factor, retention, seed, weights
-        )
-    pooled_all, sel_all, idx_all = [], [], []
-    cd_offset = 0
-    for a, b in segment_bounds(n, max_seg):
-        seg = x[a:b]
-        pooled, sel, idx = _model_downsample_seg(
-            seg, wavelet, approx_ds_factor, retention, seed, weights
-        )
-        pooled_all.append(pooled)
-        sel_all.append(sel)
-        idx_all.append(idx + cd_offset)
-        cd_offset += wv.coeff_length(len(seg), wavelet, 1)
-    return (
-        np.concatenate(pooled_all),
-        np.concatenate(sel_all),
-        np.concatenate(idx_all),
+    """:func:`model_downsample_groups` on one series: ``(pooled_cA,
+    selected_cD, detail_indices)``."""
+    pooled, sel, idx = model_downsample_groups(
+        x, [0, len(x)], wavelet, approx_ds_factor, retention, seed, max_seg, weights
     )
-
-
-def _model_downsample_seg(
-    x: np.ndarray,
-    wavelet: str,
-    approx_ds_factor: int,
-    retention: float,
-    seed: int,
-    weights=None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    cA, cD = wv.dwt(x, wavelet)
-    f = approx_ds_factor
-    m = (len(cA) - f) // f + 1
-    pooled = cA[: m * f].reshape(m, f).mean(axis=1)
-    k = max(1, int(round(len(cD) * retention)))
-    scores = attention_importance(cD, seed=seed, weights=weights)
-    order = np.argsort(-scores, kind="stable")[:k]
-    idx = np.sort(order)
-    return pooled, cD[idx], idx
+    return pooled[0], sel[0], idx[0]
 
 
 def model_downsample_batch(
@@ -330,12 +360,13 @@ def model_downsample_batch(
     seed: int = 42,
     weights=None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batched :func:`_model_downsample_seg` over same-length series.
+    """The model pipeline on one segment per row, over same-length series.
 
-    ``X`` is ``(G, n)`` — G series of identical length n (callers bucket
-    groups by length; tests assert bit-equality with the scalar path).  One
-    numpy call chain for the whole bucket instead of ~50 calls per group —
-    the per-group cost drops from ~500µs to ~30µs, which is what makes the
+    ``X`` is ``(G, n)`` — G series of identical length n
+    (:func:`model_downsample_groups` buckets segments by length; tests
+    assert bit-equality with a one-series scalar oracle).  One numpy call
+    chain for the whole bucket instead of ~50 calls per segment — the
+    per-segment cost drops from ~500µs to ~30µs, which is what makes the
     model tier job compute-bound (and hence scalable) rather than
     interpreter-bound.
     Returns ``(pooled (G, m), selected (G, k), indices (G, k))``.
@@ -425,14 +456,15 @@ def _attention_weights(
     return _ATTN_WEIGHTS[key]
 
 
-def attention_importance(
-    c: np.ndarray,
+def attention_importance_batch(
+    C: np.ndarray,
     embed_dim: int = 16,
     num_heads: int = 4,
     seed: int = 42,
     weights=None,
 ) -> np.ndarray:
-    """Frozen-weight attention importance scorer.
+    """Frozen-weight attention importance scorer over ``(G, n)``
+    same-length rows of detail coefficients.
 
     Reproduces the *scoring semantics* of the reference transformer block
     (/root/reference/core/downsampling_algorithm2.py:94-120): per-position
@@ -442,49 +474,11 @@ def attention_importance(
     *trained* weights are an artifact we replace with public deterministic
     ones (its training is self-supervised on untrained targets anyway,
     /root/reference/main.py:155-157).
-    """
-    c = np.asarray(c, dtype=np.float64)
-    n = len(c)
-    d = embed_dim
-    # sinusoidal positional encoding + value embedding (ref :180-201)
-    pos = np.arange(n)[:, None]
-    div = np.exp(np.arange(0, d, 2) * (-np.log(10000.0) / d))
-    pe = np.zeros((n, d))
-    pe[:, 0::2] = np.sin(pos * div)
-    pe[:, 1::2] = np.cos(pos * div)
-    w_in, heads = _attention_weights(d, num_heads, seed, blob=weights)
-    h = c[:, None] @ w_in + pe
-    global_mass = np.zeros(n)
-    dh = d // num_heads
-    for wq, wk in heads:
-        q, kmat = h @ wq, h @ wk
-        logits = (q @ kmat.T) / np.sqrt(dh)
-        logits -= logits.max(axis=1, keepdims=True)
-        attn = np.exp(logits)
-        attn /= attn.sum(axis=1, keepdims=True)
-        global_mass += attn.sum(axis=0)  # attention mass received per position
-    global_mass /= num_heads * n
-    # local importance: normalized |gradient| of the coefficients
-    local = np.abs(np.gradient(c)) if n > 1 else np.ones(1)
-    local = local / max(local.sum(), 1e-12)
-    scores = 0.7 * global_mass + 0.3 * local
-    e = np.exp(scores - scores.max())
-    return e / e.sum()
 
-
-def attention_importance_batch(
-    C: np.ndarray,
-    embed_dim: int = 16,
-    num_heads: int = 4,
-    seed: int = 42,
-    weights=None,
-) -> np.ndarray:
-    """Batched :func:`attention_importance` over ``(G, n)`` same-length rows.
-
-    Identical math per row (same dot products, same reduction order inside
-    each dot product) — einsum-free broadcasting matmuls so the scorer stays
-    bit-equal to the scalar path while amortizing numpy dispatch over the
-    whole bucket.
+    Einsum-free broadcasting matmuls keep each row's dot products, and their
+    reduction order, those of a one-row computation (tests assert
+    bit-equality with a one-series scalar oracle) while amortizing numpy
+    dispatch over the whole bucket.
     """
     C = np.asarray(C, dtype=np.float64)
     G, n = C.shape

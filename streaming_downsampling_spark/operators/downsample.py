@@ -11,8 +11,9 @@ bounded by the window length: skewed long conversations widen the number of
 groups, not the size of any single group.
 
 On a real cluster this module ships via ``spark-submit --py-files`` (zip of
-the package); in local mode the executor threads share the driver's
-sys.path.
+the package).  In local mode the Python workers are separate processes
+forked from :mod:`.._daemon`; they import the package from the
+``spark.executorEnv.PYTHONPATH`` that ``session.get_spark`` sets.
 
 Reference parity: selector semantics are /root/reference/new_evaluation.py:66-198;
 the model pipeline is /root/reference/core/downsampling_algorithm2.py:243-395
@@ -175,25 +176,6 @@ def _method_metrics(x: np.ndarray, method: str, target: int, **kw) -> tuple[int,
     return k, K.reconstruction_metrics(x, rec)
 
 
-def downsample_metrics(
-    df: DataFrame,
-    method: str,
-    target: int,
-    window: str = "1 hour",
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_col: str | None = "turn_idx",
-    **kw,
-) -> DataFrame:
-    """Downsample + endpoint-anchored linear reconstruction + error metrics
-    per group (the reference's evaluation loop,
-    /root/reference/new_evaluation.py:185-209, distributed)."""
-    return downsample_metrics_multi(
-        df, [method], target, window, key_col, ts_col, value_col, order_col, **kw
-    )
-
-
 def downsample_metrics_multi(
     df: DataFrame,
     methods: list[str],
@@ -283,53 +265,22 @@ def model_frame_fn(
     def frame_fn(body: pd.DataFrame) -> pd.DataFrame:
         bounds, keys, ws = group_bounds(body)
         vals = K.sanitize(body["_value"].to_numpy(dtype=np.float64))
-        lengths = np.diff(bounds)
-        g_count = len(lengths)
-        pooled_out: list = [None] * g_count
-        sel_out: list = [None] * g_count
-        idx_out: list = [None] * g_count
-        # bucket same-length groups (n <= the model's 200-point segment cap,
-        # /root/reference/main.py:106) and run the batched kernel once per
-        # distinct length; long skewed groups take the segmented scalar path
-        # where numpy overhead amortizes anyway.
-        small = np.flatnonzero(lengths <= 200)
-        small_lens = lengths[small]
-        for n in np.unique(small_lens):
-            gs = small[small_lens == n]
-            X = np.empty((len(gs), n), dtype=np.float64)
-            for j, g in enumerate(gs):
-                X[j] = vals[bounds[g] : bounds[g] + n]
-            pooled, sel, idx = K.model_downsample_batch(
-                X,
-                wavelet=wavelet,
-                approx_ds_factor=approx_ds_factor,
-                retention=retention,
-                seed=seed,
-            )
-            idx32 = idx.astype(np.int32)
-            for j, g in enumerate(gs):
-                pooled_out[g] = pooled[j].tolist()
-                sel_out[g] = sel[j].tolist()
-                idx_out[g] = idx32[j].tolist()
-        for g in np.flatnonzero(lengths > 200):
-            pooled, sel, idx = K.model_downsample(
-                vals[bounds[g] : bounds[g + 1]],
-                wavelet=wavelet,
-                approx_ds_factor=approx_ds_factor,
-                retention=retention,
-                seed=seed,
-            )
-            pooled_out[g] = pooled.tolist()
-            sel_out[g] = sel.tolist()
-            idx_out[g] = idx.astype(np.int32).tolist()
+        pooled, sel, idx = K.model_downsample_groups(
+            vals,
+            bounds,
+            wavelet=wavelet,
+            approx_ds_factor=approx_ds_factor,
+            retention=retention,
+            seed=seed,
+        )
         return pd.DataFrame(
             {
                 "key": keys[bounds[:-1]],
                 "window_start": ws[bounds[:-1]],
-                "n": lengths.astype(np.int32),
-                "pooled_approx": pooled_out,
-                "detail_values": sel_out,
-                "detail_indices": idx_out,
+                "n": np.diff(bounds).astype(np.int32),
+                "pooled_approx": [p.tolist() for p in pooled],
+                "detail_values": [v.tolist() for v in sel],
+                "detail_indices": [i.tolist() for i in idx],
             }
         )
 
@@ -373,12 +324,13 @@ def attention_scores(
     This is the value-oracle seam for the one ingredient the model parity
     queries could only multiset-check: the attention importance ordering
     (/root/reference/core/downsampling_algorithm2.py:94-120).  Segmentation
-    replicates :func:`kernels.model_downsample` exactly (groups <= max_seg
-    run whole — even length-1 groups; longer groups split at max_seg with a
-    trailing <2-point segment dropped), dwt + scoring run through the SAME
-    batched kernels as the production model job (bit-equal to the scalar
-    path by test), bucketed by segment length so each distinct length costs
-    one numpy call chain regardless of group count.
+    and length bucketing are :func:`kernels.model_downsample_groups`' own
+    (:func:`kernels.group_segments`, :func:`kernels.length_buckets`: groups
+    <= max_seg run whole — even length-1 groups; longer groups split at
+    max_seg with a trailing <2-point segment dropped), and dwt + scoring run
+    through the SAME batched kernels as the production model job, so each
+    distinct segment length costs one numpy call chain regardless of group
+    count.
     """
 
     def frame_fn(body: pd.DataFrame) -> pd.DataFrame:
@@ -386,20 +338,11 @@ def attention_scores(
         vals = K.sanitize(body["_value"].to_numpy(dtype=np.float64))
         gkey = keys[bounds[:-1]]
         gws = ws[bounds[:-1]]
-        segs: list[tuple[int, int, np.ndarray]] = []
-        for g in range(len(bounds) - 1):
-            x = vals[bounds[g] : bounds[g + 1]]
-            # segmentation comes from the ONE shared rule — this seam's
-            # oracle validity depends on never diverging from the kernel
-            for si, (a, b) in enumerate(K.segment_bounds(len(x), max_seg)):
-                segs.append((g, si, x[a:b]))
-        bylen: dict[int, list[tuple[int, int, np.ndarray]]] = {}
-        for t in segs:
-            bylen.setdefault(len(t[2]), []).append(t)
+        # segmentation comes from the ONE shared rule — this seam's oracle
+        # validity depends on never diverging from the kernel
+        start, stop, group, ordinal = K.group_segments(bounds, max_seg)
         frames: list[pd.DataFrame] = []
-        for n_seg in sorted(bylen):
-            items = bylen[n_seg]
-            X = np.stack([t[2] for t in items])
+        for ids, X in K.length_buckets(vals, start, stop):
             _, cD = wv.dwt(X, wavelet)
             S = K.attention_importance_batch(cD, seed=seed, weights=weights)
             m = cD.shape[1]
@@ -407,16 +350,14 @@ def attention_scores(
             order = np.argsort(-S, axis=1, kind="stable")[:, :k]
             selmask = np.zeros(S.shape, dtype=np.int32)
             np.put_along_axis(selmask, order, 1, axis=1)
-            G = len(items)
-            gs = np.array([t[0] for t in items])
+            G = len(ids)
+            gs = group[ids]
             frames.append(
                 pd.DataFrame(
                     {
                         "key": np.repeat(gkey[gs], m),
                         "window_start": np.repeat(gws[gs], m),
-                        "seg": np.repeat(
-                            np.array([t[1] for t in items], dtype=np.int32), m
-                        ),
+                        "seg": np.repeat(ordinal[ids].astype(np.int32), m),
                         "i": np.tile(np.arange(m, dtype=np.int32), G),
                         "n_cd": np.full(G * m, m, dtype=np.int32),
                         "k": np.full(G * m, k, dtype=np.int32),

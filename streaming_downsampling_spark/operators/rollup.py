@@ -144,59 +144,6 @@ def cascade(rollup_df: DataFrame, to_tier: str) -> DataFrame:
     )
 
 
-def rollup_salted(
-    df: DataFrame,
-    tier: str,
-    n_salts: int = 16,
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_col: str = "turn_idx",
-) -> DataFrame:
-    """Skew-safe two-phase rollup for pathological hot keys.
-
-    A single giant (key, window) group cannot be split by AQE once it reaches
-    a hash aggregate on a skewed key; salting fans the partial aggregation
-    out over ``n_salts`` reducers, then merges.  Semantically identical to
-    :func:`rollup` (asserted in tests); use when a key holds ≫ the average
-    number of points per window (FIXTURES.md skew knob: 1 % of conversations
-    are 100× longer).
-    """
-    salt = F.pmod(F.xxhash64(F.col(order_col)), F.lit(n_salts)).alias("salt")
-    w = F.window(ts_col, tier_interval(tier))
-    partial = (
-        df.groupBy(F.col(key_col).alias("key"), w.alias("w"), salt)
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum(value_col).alias("sum_value"),
-            F.min(value_col).alias("min_value"),
-            F.max(value_col).alias("max_value"),
-            F.min(order_col).alias("min_ord"),
-            F.max(order_col).alias("max_ord"),
-            F.min_by(value_col, F.col(order_col)).alias("first_value"),
-            F.max_by(value_col, F.col(order_col)).alias("last_value"),
-        )
-    )
-    return (
-        partial.groupBy("key", "w")
-        .agg(
-            F.sum("n_points").alias("n_points"),
-            F.sum("sum_value").alias("sum_value"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-            F.min_by("first_value", F.col("min_ord")).alias("first_value"),
-            F.max_by("last_value", F.col("max_ord")).alias("last_value"),
-        )
-        .select(
-            "key",
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            *ROLLUP_COLS,
-        )
-        .withColumn("avg_value", F.col("sum_value") / F.col("n_points"))
-    )
-
-
 def sessionize(
     df: DataFrame,
     gap: str = "30 minutes",

@@ -3,6 +3,7 @@
 import numpy as np
 import pandas as pd
 import pytest
+from scalar_oracles import attention_importance, model_downsample_segment
 
 from streaming_downsampling_spark.functions import kernels as K
 from streaming_downsampling_spark.operators.asof import asof_join
@@ -14,7 +15,7 @@ def test_model_downsample_batch_bit_equal_scalar():
         X = rng.normal(size=(11, n)) * 50
         pooled_b, sel_b, idx_b = K.model_downsample_batch(X)
         for j in range(len(X)):
-            p, s, i = K.model_downsample(X[j])
+            p, s, i = model_downsample_segment(X[j])
             assert np.array_equal(p, pooled_b[j]), f"pooled mismatch n={n}"
             assert np.array_equal(s, sel_b[j]), f"selected mismatch n={n}"
             assert np.array_equal(i, idx_b[j]), f"indices mismatch n={n}"
@@ -26,7 +27,7 @@ def test_attention_importance_batch_bit_equal_scalar():
         C = rng.normal(size=(5, n))
         batch = K.attention_importance_batch(C)
         for j in range(len(C)):
-            assert np.array_equal(batch[j], K.attention_importance(C[j]))
+            assert np.array_equal(batch[j], attention_importance(C[j]))
 
 
 @pytest.fixture(scope="module")

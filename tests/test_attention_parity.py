@@ -6,6 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from scalar_oracles import attention_importance
 
 from streaming_downsampling_spark.functions import kernels as K
 from streaming_downsampling_spark.functions import wavelets as wv
@@ -24,7 +25,7 @@ def _expected_rows(x: np.ndarray, wavelet="db4", retention=0.8, max_seg=200):
             segs.append(s)
     for si, s in enumerate(segs):
         _, cd = wv.dwt(s, wavelet)
-        scores = K.attention_importance(cd, seed=42)
+        scores = attention_importance(cd, seed=42)
         k = max(1, int(round(len(cd) * retention)))
         order = np.argsort(-scores, kind="stable")[:k]
         sel = np.zeros(len(cd), dtype=int)

@@ -1,5 +1,7 @@
 import numpy as np
+import pandas as pd
 import pytest
+from scalar_oracles import attention_importance, model_downsample_scalar
 
 from streaming_downsampling_spark.functions import kernels as K
 
@@ -85,9 +87,42 @@ def test_model_downsample_golden_lengths():
 
 
 def test_attention_importance_is_distribution():
-    s = K.attention_importance(np.random.default_rng(3).normal(size=103))
+    s = attention_importance(np.random.default_rng(3).normal(size=103))
     assert np.isclose(s.sum(), 1.0)
     assert np.all(s > 0)
+
+
+def test_model_frame_fn_matches_scalar_oracle_across_segment_edges():
+    """One frame mixing groups on both sides of the 200-point segment cap
+    (whole groups of 1..200, a 201-point group with a 1-point tail that is
+    dropped, 401 and 2,000 points in several segments): every group's
+    output equals the one-segment-at-a-time scalar oracle, element for
+    element, detail indices offset per segment."""
+    from streaming_downsampling_spark.operators.downsample import model_frame_fn
+
+    rng = np.random.default_rng(31)
+    sizes = [1, 2, 40, 200, 201, 401, 2000, 40, 201, 2]
+    groups = [np.round(rng.normal(50.0, 10.0, n), 2) for n in sizes]
+    body = pd.DataFrame(
+        {
+            "key": np.repeat([f"c{g:02d}" for g in range(len(sizes))], sizes),
+            "window_start": pd.Timestamp("2025-01-01"),
+            "_value": np.concatenate(groups),
+        }
+    )
+    out = model_frame_fn()(body)
+    assert out["n"].tolist() == sizes
+    for g, x in enumerate(groups):
+        pooled, sel, idx = model_downsample_scalar(x)
+        row = out.iloc[g]
+        assert row["key"] == f"c{g:02d}"
+        np.testing.assert_array_equal(
+            np.asarray(row["pooled_approx"]).view(np.uint64), pooled.view(np.uint64)
+        )
+        np.testing.assert_array_equal(
+            np.asarray(row["detail_values"]).view(np.uint64), sel.view(np.uint64)
+        )
+        assert row["detail_indices"] == idx.tolist()
 
 
 def test_reconstruct_linear_anchoring():

@@ -12,16 +12,12 @@ from pyspark.sql import functions as F
 from streaming_downsampling_spark import oracle
 from streaming_downsampling_spark.functions import kernels as K
 from streaming_downsampling_spark.operators.downsample import (
-    downsample_metrics,
+    downsample_metrics_multi,
     downsample_model,
     downsample_select,
 )
 from streaming_downsampling_spark.operators.gapfill import gapfill
-from streaming_downsampling_spark.operators.rollup import (
-    cascade,
-    rollup,
-    rollup_salted,
-)
+from streaming_downsampling_spark.operators.rollup import cascade, rollup
 
 
 @pytest.fixture(scope="module")
@@ -67,12 +63,6 @@ def test_cascade_equals_direct(transcripts):
         got = _spark_rollup_pdf(cascade(r1m, tier), tier)
         exp = _spark_rollup_pdf(rollup(transcripts, tier), tier)
         pd.testing.assert_frame_equal(got, exp, check_exact=True)
-
-
-def test_salted_rollup_equals_plain(transcripts):
-    got = _spark_rollup_pdf(rollup_salted(transcripts, "1h", n_salts=8), "1h")
-    exp = _spark_rollup_pdf(rollup(transcripts, "1h"), "1h")
-    pd.testing.assert_frame_equal(got, exp, check_exact=True)
 
 
 @pytest.mark.parametrize("method", ["linear", "locf", "zero"])
@@ -143,7 +133,9 @@ def test_text_equality_invariant(transcripts):
 
 
 def test_downsample_metrics_shape(transcripts):
-    m = downsample_metrics(transcripts, "wavelet_threshold", 20, window="1 day").toPandas()
+    m = downsample_metrics_multi(
+        transcripts, ["wavelet_threshold"], 20, window="1 day"
+    ).toPandas()
     assert (m["k"] <= m["n"]).all()
     assert m["rmse"].ge(0).all()
     big = m[m["n"] >= 40]

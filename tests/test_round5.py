@@ -232,6 +232,8 @@ def test_attention_weights_blob_roundtrip(tmp_path):
     weights, round-tripping them through np.savez, and feeding them back as
     ``weights=`` must reproduce the exact selection; perturbed weights must
     not."""
+    from scalar_oracles import attention_importance
+
     from streaming_downsampling_spark.functions import kernels as K
 
     x = np.round(np.sin(np.arange(200) / 7.0) * 10 + np.cos(np.arange(200)), 2)
@@ -250,8 +252,8 @@ def test_attention_weights_blob_roundtrip(tmp_path):
     np.testing.assert_array_equal(bi[0], base_idx)
     # a genuinely different artifact changes the ranking
     bent = {k: (v * -1.7 + 0.3 if k != "w_in" else v) for k, v in loaded.items()}
-    s_base = K.attention_importance(x)
-    s_bent = K.attention_importance(x, weights=bent)
+    s_base = attention_importance(x)
+    s_bent = attention_importance(x, weights=bent)
     assert not np.array_equal(s_base, s_bent)
 
 
