@@ -98,28 +98,14 @@ def _checksum_terms(ts_us: np.ndarray, values: np.ndarray) -> np.ndarray:
     return _fold63(_fold63(hi32 + _fold63(lo)) + v)
 
 
-def _checksum(ts_us: np.ndarray, values: np.ndarray) -> int:
-    """Order-independent 63-bit checksum over (ts, value-bitpattern) pairs:
-    exact mod-(2^63-1) sum of the per-point terms."""
-    term = _checksum_terms(ts_us, values)
-    # tree reduction: each pairwise sum of two <2^63 terms fits uint64, then
-    # folds back under 2^63 — exact mod-p sum in log2(n) vectorized passes
-    while len(term) > 1:
-        if len(term) % 2:
-            term = np.concatenate([term, np.zeros(1, dtype=np.uint64)])
-        term = _fold63(term[0::2] + term[1::2])
-    out = int(term[0]) if len(term) else 0
-    return out % int(_MOD)
-
-
 def _checksum_batched(
     ts_us: np.ndarray, values: np.ndarray, bounds: np.ndarray
 ) -> np.ndarray:
-    """Per-chunk :func:`_checksum` over ``[bounds[g], bounds[g+1])`` slices
-    in one vectorized pass: the <2^63 terms are split 32/32 and
-    segment-summed exactly (each half-sum of n < 2^31 points stays under
-    2^63), then recombined mod p — identical to the per-chunk tree
-    reduction, which also computes the exact mod-p sum."""
+    """Order-independent 63-bit checksum over (ts, value-bitpattern) pairs
+    of each ``[bounds[g], bounds[g+1])`` slice: the exact mod-(2^63-1) sum
+    of the per-point terms, in one vectorized pass.  The <2^63 terms are
+    split 32/32 and segment-summed exactly (each half-sum of n < 2^31
+    points stays under 2^63), then recombined mod p."""
     term = _checksum_terms(ts_us, values)
     starts = np.asarray(bounds[:-1], dtype=np.int64)
     counts = np.asarray(bounds[1:], dtype=np.int64) - starts
@@ -127,7 +113,7 @@ def _checksum_batched(
         return np.zeros(len(starts), dtype=np.uint64)
     # reduceat quirk: an empty group returns term[start] (and a trailing
     # empty group would index past the end) — clip the starts and zero the
-    # empty groups afterwards, matching _checksum([]) == 0
+    # empty groups afterwards (an empty slice sums to 0)
     starts_c = np.minimum(starts, len(term) - 1)
     lo = np.add.reduceat(term & np.uint64(0xFFFFFFFF), starts_c)
     hi = np.add.reduceat(term >> np.uint64(32), starts_c)

@@ -13,9 +13,7 @@ from __future__ import annotations
 import time
 import uuid
 
-import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -54,19 +52,11 @@ def new_job_id() -> str:
     return uuid.uuid4().hex[:12]
 
 
-def _local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
-    """``rows`` as a DataFrame built from a typed Arrow table, which plans as
-    a ``LocalTableScan``, where a list of tuples would become a Python RDD
-    whose every slice pays the per-task cost described in the
-    ``operators/_groupmap.py`` module docstring."""
-    arrow = to_arrow_schema(schema)
-    cols = [pa.array(c, f.type) for c, f in zip(zip(*rows), arrow)]
-    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
-
-
 class LineageLog:
     """Collects lineage/metric rows in memory and flushes them as warehouse
-    appends (one small parquet commit per flush — not per row)."""
+    appends: one small parquet commit per table per flush — not per row —
+    written from the driver by ``Warehouse.append_rows``, so a flush runs no
+    Spark job."""
 
     def __init__(self, wh: Warehouse, job_id: str | None = None) -> None:
         self.wh = wh
@@ -102,9 +92,11 @@ class LineageLog:
         self._metrics.append((self.job_id, name, float(value), time.time()))
 
     def flush(self, spark: SparkSession) -> None:
+        """Commit the pending rows.  ``spark`` is unused: the rows are
+        written from the driver."""
         if self._lineage:
-            self.wh.append("lineage", _local_frame(spark, self._lineage, LINEAGE_SCHEMA))
+            self.wh.append_rows("lineage", self._lineage, LINEAGE_SCHEMA)
             self._lineage = []
         if self._metrics:
-            self.wh.append("metrics", _local_frame(spark, self._metrics, METRICS_SCHEMA))
+            self.wh.append_rows("metrics", self._metrics, METRICS_SCHEMA)
             self._metrics = []

@@ -8,6 +8,16 @@ shuffle partitions sized to the core count rather than the 200 default.
 Python kernels: their exchange (``operators._groupmap.prepare_sorted``) runs
 one task per core, with ``shuffle.partitions`` only as a ceiling.
 
+A persisted frame's plan may change its output partitioning
+(``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``, off by
+default), so AQE coalesces the shuffle under a cache as it does anywhere
+else.  The MERGE path caches tiny frames (``refresh_tier_cascade``'s
+aggregate, ``Warehouse.merge_upsert``'s batch); with the setting off, every
+stage over them ran ``shuffle.partitions`` tasks, mostly empty.  Frames
+persisted after a fixed-count ``repartition(n, ...)`` keep their n
+partitions: AQE never coalesces a repartition that names its count.
+Streams are unaffected, since Spark runs micro-batches with AQE off.
+
 The Python worker daemon starts from :mod:`streaming_downsampling_spark._daemon`,
 so workers import the installed PySpark the driver runs instead of Spark's
 ``pyspark.zip``, whose re-read before every task cost ~0.19 CPU s.
@@ -46,6 +56,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # AQE sizes the shuffles under persisted frames too (module docstring)
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 100k-row Arrow batches: the grouped kernels bucket same-length
         # groups per batch, so bigger batches mean real vectorization

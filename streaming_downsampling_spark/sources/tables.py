@@ -28,6 +28,9 @@ thin, swappable layer (SURVEY.md §7.2 M0 fallback):
   writes (the Iceberg atomic-commit property),
 * ``append`` commits ONLY the new batch's files — O(batch) I/O, the old
   manifest entries are reused by reference,
+* ``append_rows`` commits rows the driver already holds (the lineage and
+  metrics tables) as one parquet file written by pyarrow: the same
+  ``append`` snapshot, but no Spark job (PyIceberg's Arrow ``append``),
 * ``merge_upsert`` is an idempotent MERGE keyed on arbitrary columns;
   with ``partition_by`` it rewrites ONLY the partitions the batch touches
   (real Iceberg MERGE behavior) — per-micro-batch cost is O(touched
@@ -47,8 +50,10 @@ import os
 import shutil
 import time
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 UNPARTITIONED = "*"
@@ -308,6 +313,35 @@ class Warehouse:
         return self._finish(
             table, "append", rows, meta, snap, parts, schema.jsonValue(),
             _kept_partition_by(entry, partition_by),
+        )
+
+    def append_rows(self, table: str, rows: list[tuple], schema: StructType) -> int:
+        """``append(table, df)`` of ``rows`` held on the driver, without a
+        Spark job: pyarrow writes them as one parquet file, and the snapshot
+        is the unpartitioned ``append`` Spark's write would commit
+        (``partition_by`` ``None``).  A column whose type differs from the
+        table's raises ``ValueError`` before anything is written."""
+        arrow = to_arrow_schema(schema)
+        data = pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)],
+            schema=arrow,
+        )
+        meta = self._load_meta(table)
+        parts: dict = {}
+        if meta["current"] is not None:
+            entry = self._snapshot_entry(meta, None)
+            parts = {p: list(ds) for p, ds in entry["parts"].items()}
+            schema = _union_schema(StructType.fromJson(entry["schema"]), schema)
+        snap = self._next_snap(meta)
+        name = f"d{snap}-0"
+        out = self._data_dir(table, name)
+        # what Spark's mode("overwrite") does to a dir a failed commit left
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        pq.write_table(data, os.path.join(out, "part-00000.parquet"))
+        parts.setdefault(UNPARTITIONED, []).append(name)
+        return self._finish(
+            table, "append", data.num_rows, meta, snap, parts, schema.jsonValue(), None
         )
 
     def merge_upsert(

@@ -42,11 +42,11 @@ def no_python_rdd(df) -> bool:
     return "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
 
 
-def _job_count(spark, fn):
-    """Spark jobs without a job group that ``fn`` submits.  Counts the job
-    ids above the newest one seen before ``fn``, after draining the listener
-    bus on both sides: the status store only sees a job once the bus has
-    delivered its start event, and it keeps only the last
+def _new_jobs(spark, fn) -> list[int]:
+    """Ids of the Spark jobs without a job group that ``fn`` submits.  Takes
+    the job ids above the newest one seen before ``fn``, after draining the
+    listener bus on both sides: the status store only sees a job once the
+    bus has delivered its start event, and it keeps only the last
     ``spark.ui.retainedJobs`` jobs, so a difference of list lengths stops
     counting in a long session."""
     bus = spark.sparkContext._jsc.sc().listenerBus()
@@ -55,4 +55,18 @@ def _job_count(spark, fn):
     newest = max(tracker.getJobIdsForGroup(None) or [-1])
     fn()
     bus.waitUntilEmpty()
-    return sum(1 for j in tracker.getJobIdsForGroup(None) or [] if j > newest)
+    return [j for j in tracker.getJobIdsForGroup(None) or [] if j > newest]
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs without a job group that ``fn`` submits."""
+    return len(_new_jobs(spark, fn))
+
+
+def _task_count(spark, fn) -> list[int]:
+    """Tasks completed by each stage of the jobs ``fn`` submits, one entry
+    per stage: ``max`` is the widest stage, ``sum`` the total.  A stage
+    skipped because it reused a shuffle's output counts 0."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = {s for j in _new_jobs(spark, fn) for s in tracker.getJobInfo(j).stageIds}
+    return [tracker.getStageInfo(s).numCompletedTasks for s in sorted(stages)]

@@ -1,7 +1,8 @@
 """Scalar reference implementations the package's batched kernels are tested
-against: a Gorilla bit writer and timestamp reader, and the one-series
-attention scorer and model pipeline.  The package keeps only the batched
-forms (plus the scalar XOR reader, its fallback for '10' records)."""
+against: a Gorilla bit writer and timestamp reader, the per-chunk checksum,
+and the one-series attention scorer and model pipeline.  The package keeps
+only the batched forms (plus the scalar XOR reader, its fallback for '10'
+records)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import numpy as np
 from streaming_downsampling_spark.functions import gorilla as G
 from streaming_downsampling_spark.functions import kernels as K
 from streaming_downsampling_spark.functions import wavelets as wv
+from streaming_downsampling_spark.operators.compress import _MOD, _checksum_terms, _fold63
 
 
 class BitWriter:
@@ -36,6 +38,19 @@ class BitWriter:
         if self.nbits:
             return bytes(self.buf) + bytes([(self.acc << (8 - self.nbits)) & 0xFF])
         return bytes(self.buf)
+
+
+def checksum(ts_us: np.ndarray, values: np.ndarray) -> int:
+    """One chunk's ``compress._checksum_batched``: the exact mod-(2^63-1)
+    sum of the per-point terms, by tree reduction — each pairwise sum of two
+    <2^63 terms fits uint64, then folds back under 2^63."""
+    term = _checksum_terms(ts_us, values)
+    while len(term) > 1:
+        if len(term) % 2:
+            term = np.concatenate([term, np.zeros(1, dtype=np.uint64)])
+        term = _fold63(term[0::2] + term[1::2])
+    out = int(term[0]) if len(term) else 0
+    return out % int(_MOD)
 
 
 def decode_timestamps_scalar(blob: bytes) -> np.ndarray:

