@@ -507,97 +507,6 @@ def simhash_near_dups_blocked(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Duplicate clustering: connected components over candidate pairs.
-
-    The final stage of a dedup pipeline — near-dup PAIRS must become
-    duplicate CLUSTERS with one canonical representative (the min id) before
-    anything can be dropped.  Iterative min-label propagation: each round
-    every node adopts the minimum label among itself and its neighbors,
-    converging to component_id = min(node id in component).  Rounds are
-    O(component diameter); duplicate clusters are near-cliques, so 2-3
-    rounds (``max_iter`` bounds adversarial chains — for long
-    path-shaped graphs swap in the O(log n)-round large-star/small-star of
-    Kiveris et al. 2014, same join shapes).  Each round is two hash-key
-    shuffles; labels are eagerly localCheckpoint-ed per round, which both
-    materializes them AND truncates the logical plan — a bare persist
-    caches data but the plan still nests (measured 4x plan-string growth
-    per round: exponential analysis cost that OOMs the driver near round
-    10 on chain graphs), and the checkpoint blocks are GC-scoped so a
-    catalog run leaves the storage pool clean.  Convergence check = count
-    of changed labels (no full-table sums that could overflow).
-
-    Output: (node, component) for every node appearing in ``pairs``.  A
-    pair with a NULL id is no edge and contributes no node.
-    """
-    if max_iter < 1:
-        # the for/else convergence check below reads `changed`, which is only
-        # bound inside the loop — a zero-round call must fail loudly up front
-        # (round-3 ADVICE: max_iter <= 0 used to surface as a NameError)
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    pairs = pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
-    e = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-        )
-        .distinct()
-        # the edge set is read once per round: materialize it, or every
-        # round recomputes the whole upstream candidate pipeline
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        e.select(F.col("src").alias("node")).distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            e.join(labels, e.src == labels.node)
-            .groupBy("dst")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.dst, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("nbr_component", F.col("component")),
-                ).alias("component"),
-            )
-            # lazy: the changed-count action right below is the first read,
-            # so it materializes the round's labels and counts the moved
-            # ones in ONE job instead of checkpoint-then-count
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # exhausting max_iter with labels still moving means a component
-        # wider than max_iter hops — silently returning split clusters is a
-        # correctness trap (round-2 ADVICE).  Chain-shaped graphs need the
-        # O(log n)-round large-star/small-star variant (Kiveris 2014).
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); a component's diameter "
-            "exceeds max_iter — raise max_iter or use a log-round variant"
-        )
-    return labels
-
-
 def _edge_signature(edges: DataFrame) -> tuple[int, int]:
     """Order-insensitive (count, hash-xor) signature of an edge set — the
     O(1)-space fixed-point test for the star iterations (collision odds
@@ -675,9 +584,9 @@ def connected_components_star(
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC 2014): converges in O(log n) ALTERNATIONS regardless of component
-    diameter — the variant :func:`connected_components`'s docstring defers
-    to for chain-shaped graphs, where min-label propagation needs
-    O(diameter) rounds.
+    diameter, where min-label propagation needs O(diameter) rounds and
+    fails on chain-shaped graphs.  It is the engine's one connected-
+    components operator (the propagation variant is a test oracle).
 
     * large-star(u): every neighbor v > u re-attaches to
       m = min(Γ(u) ∪ {u});
@@ -686,15 +595,18 @@ def connected_components_star(
 
     Each half-round is one window-min pass over the (symmetric) edge set —
     no groupBy+join pair, so nothing is read twice.  Each alternation is
-    exactly ONE Spark job: the result is a LAZY localCheckpoint (plan
-    truncation — see :func:`connected_components`) whose materialization is
-    triggered by the fixed-point signature scan itself, so the signature
-    costs no extra action.  Fixed point detected by an order-insensitive
+    exactly ONE Spark job: the result is a LAZY localCheckpoint whose
+    materialization is triggered by the fixed-point signature scan itself,
+    so the signature costs no extra action.  A checkpoint, not a persist:
+    it truncates the logical plan, which a persist keeps nesting round over
+    round (exponential analysis cost), and its blocks are GC-scoped.
+    Fixed point detected by an order-insensitive
     (count, hash-xor) signature.  At the fixed point the edges form stars
     centered on each component's minimum id.
 
-    Output: (node, component) for every node appearing in ``pairs`` —
-    identical semantics to :func:`connected_components`.
+    Output: (node, component) for every node appearing in ``pairs``,
+    component = the min node id of its component.  A pair with a NULL id is
+    no edge and contributes no node.
 
     ``small_graph_max_edges``: when the FIRST signature scan (which already
     counts the deduplicated edges — no extra job) reports at most this many
@@ -815,9 +727,8 @@ def connected_components_star(
             ).distinct()
         )
     )
-    # Contract parity with connected_components: a node appearing ONLY in
-    # self-pairs (u == v) was excluded from the star edges but must still
-    # come back self-labeled.  ``selfies`` reads the (a, a) rows straight
+    # Contract: a node appearing ONLY in self-pairs (u == v) was excluded
+    # from the star edges but must still come back self-labeled.  ``selfies`` reads the (a, a) rows straight
     # off the initial checkpoint — empty for every pair generator in this
     # repo (they all emit a < b), and never a re-run of the upstream
     # candidate pipeline.
@@ -847,15 +758,12 @@ def dedup_components(
         bands=bands,
         hash_fn=hash_fn,
         distinct=False,  # CC distincts its own edge set — skip the dup shuffle
-        # pairs (clique) edges, NOT star: min-label propagation is
-        # O(component diameter) rounds, and star edges put two non-min
-        # bucket members 2 hops apart instead of 1 — a bucket-chained
-        # cluster could exceed max_iter and crash a call that converged
-        # before.  Star edges belong to the O(log n)-round Kiveris variant
-        # (dedup_components_star), which is diameter-proof by construction.
+        # pairs (clique) edges: the dedup_components_star catalog leaf
+        # feeds the same components star edges, so the two leaves check
+        # both edge modes against one oracle
         edge_mode="pairs",
     )
-    comp = connected_components(cands)
+    comp = connected_components_star(cands)
     return (
         df.select(id_col)
         .join(comp.withColumnRenamed("node", id_col), id_col, "left")

@@ -16,7 +16,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-TIER_US = {"1m": 60_000_000, "1h": 3_600_000_000, "1d": 86_400_000_000}
+
+def _tier_us(tier: str) -> int:
+    """Grid step of a tier in microseconds, parsed by pandas rather than by
+    the engine's own tier grammar (``operators.rollup``)."""
+    return pd.Timedelta(tier).value // 1000
 
 
 def to_pandas(tbl) -> pd.DataFrame:
@@ -31,7 +35,7 @@ def to_pandas(tbl) -> pd.DataFrame:
 
 def rollup_oracle(pdf: pd.DataFrame, tier: str, key: str = "conv_id") -> pd.DataFrame:
     """Windowed aggregates matching operators.rollup.rollup output."""
-    us = TIER_US[tier]
+    us = _tier_us(tier)
     d = pdf.copy()
     d["window_start_us"] = (d["ts_us"] // us) * us
     d = d.sort_values([key, "window_start_us", "turn_idx"], kind="stable")
@@ -53,7 +57,7 @@ def gapfill_oracle(
     roll: pd.DataFrame, tier: str, value_col: str = "avg_value", method: str = "linear"
 ) -> pd.DataFrame:
     """Dense spine + locf/linear/zero fill matching operators.gapfill."""
-    us = TIER_US[tier]
+    us = _tier_us(tier)
     frames = []
     for key, grp in roll.groupby("key", sort=True):
         grp = grp.sort_values("window_start_us")
@@ -105,7 +109,7 @@ def select_oracle(
     """Per (key, window) group: sort by turn_idx, sanitize, select indices."""
     from .functions import kernels as K
 
-    us = TIER_US[window]
+    us = _tier_us(window)
     d = pdf.copy()
     d["window_start_us"] = (d["ts_us"] // us) * us
     rows = []

@@ -29,8 +29,8 @@ from .operators.downsample import (
 )
 from .operators.gapfill import gapfill
 from .operators.multimodal import extract_features, frame_sample_plan, synth_media
-from .operators.rollup import cascade, rollup
-from .streaming.jobs import refresh_tier_cascade, stream_partitions
+from .operators.rollup import cascade, rollup, tier_aggregate
+from .streaming.jobs import merge_by_day, refresh_tier_cascade, stream_partitions
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2079,8 +2079,10 @@ def q_dedup_components(spark, sf_dir):
     every doc with its canonical cluster id (min doc_id in component).
     The oracle computes the transitive closure with a recursive CTE —
     feasible exactly because candidate pairs are sparse; the Spark side uses
-    min-label propagation (bounded rounds, two hash shuffles each), the
-    shape that survives a 10⁹-doc corpus where closure does not."""
+    the large-star/small-star components (O(log n) alternations, or one
+    driver union-find for a small candidate graph), the shape that survives
+    a 10⁹-doc corpus where closure does not.  Same components operator as
+    ``dedup_components_star``, fed clique edges instead of star edges."""
     docs = _t(spark, sf_dir, "documents")
     return D.dedup_components(docs, num_hashes=16, bands=4, hash_fn="md5")
 
@@ -2134,9 +2136,9 @@ FROM blk l JOIN blk r ON l.block = r.block AND l.doc_id < r.doc_id
 
 def q_dedup_components_star(spark, sf_dir):
     """Duplicate clustering via the O(log n)-round large-star/small-star
-    algorithm (Kiveris 2014) — same LSH candidate pairs, same oracle as the
-    label-propagation ``dedup_components``, but convergence is independent
-    of component diameter (the chain-graph scale hazard)."""
+    algorithm (Kiveris 2014) — same LSH candidates and same oracle as
+    ``dedup_components``, but as star edges (linear per bucket) instead of
+    the clique of pairs."""
     docs = _t(spark, sf_dir, "documents")
     cands = D.lsh_candidates(
         docs,
@@ -3712,46 +3714,15 @@ def q_stream_tier_cascade(spark, sf_dir):
     root = f"/tmp/sds_whcas_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}"
     shutil.rmtree(root, ignore_errors=True)
     wh = Warehouse(spark, root)
-    agg = (
-        stream.withWatermark("ts", "1 second")
-        .groupBy(
-            F.col("event_type").alias("key"),
-            F.window("ts", "1 hour").alias("w"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum("value").alias("sum_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-        .select(
-            "key",
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_points",
-            "sum_value",
-            "min_value",
-            "max_value",
-        )
-        .filter(F.col("key") != "__sentinel__")
-    )
-
-    def sink(batch_df, batch_id):
-        b = batch_df.withColumn(
-            "p_day", F.date_format("window_start", "yyyy-MM-dd")
-        ).persist()
-        if b.count():
-            wh.merge_upsert(
-                "tier_1h", b, keys=["key", "window_start"], partition_by="p_day"
-            )
-        b.unpersist()
-
+    agg = tier_aggregate(
+        stream.withWatermark("ts", "1 second"), "1h", first_last=False, key_col="event_type"
+    ).filter(F.col("key") != "__sentinel__")
     with stream_partitions(spark, 8):
         q = (
             agg.writeStream.outputMode("append")
             .option("checkpointLocation", f"{root}/ckpt")
             .trigger(availableNow=True)
-            .foreachBatch(sink)
+            .foreachBatch(lambda batch_df, _: merge_by_day(wh, "tier_1h", batch_df))
             .start()
         )
     if not q.awaitTermination(600):

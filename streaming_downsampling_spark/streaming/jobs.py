@@ -10,9 +10,13 @@ streaming path is first-class:
 * ``withWatermark("ts", ...)`` bounds state; late rows beyond the watermark
   are dropped by Spark and surfaced via the ``numRowsDroppedByWatermark``
   progress metric into the metrics table,
+* the windowed aggregate is ``operators.rollup.tier_aggregate``, the same
+  definition the batch ``rollup``/``cascade`` use,
 * ``foreachBatch`` + idempotent warehouse MERGE keyed on (key, window_start)
   → exactly-once at the table level across restarts: the checkpoint replays
-  at-least-once, the MERGE makes it converge,
+  at-least-once, the MERGE makes it converge.  :func:`merge_by_day` is the
+  one day-partitioned MERGE sink, shared by the stream, the cascade refresh
+  and the ``stream_tier_cascade`` catalog query,
 * resume = same ``checkpointLocation`` + the warehouse's current snapshot.
 
 ``run_tier_stream`` uses ``Trigger.AvailableNow`` so tests/benches run it as
@@ -34,7 +38,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.rollup import tier_interval
+from ..operators.rollup import tier_aggregate
 from ..plans.lineage import LineageLog
 from ..sources.tables import Warehouse
 
@@ -58,41 +62,24 @@ def stream_partitions(spark: SparkSession, n):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def tier_agg_stream(
-    stream_df: DataFrame,
-    tier: str,
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Windowed tier aggregate on a stream (update-mode compatible).
-
-    first/last by turn order are not computable incrementally without
-    arbitrary state, so the streaming tier carries the algebraic aggregates
-    (n/sum/min/max) — exactly what the cascade needs; avg stays exact.
-    """
-    w = F.window(ts_col, tier_interval(tier))
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col).alias("key"), w.alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum(value_col).alias("sum_value"),
-            F.min(value_col).alias("min_value"),
-            F.max(value_col).alias("max_value"),
+def merge_by_day(warehouse: Warehouse, table: str, df: DataFrame) -> tuple[int, int | None]:
+    """The one tier MERGE sink: add the day partition column ``p_day``
+    (Iceberg-style days(window_start)), persist, count, and MERGE on
+    (key, window_start) partition-scoped — each commit rewrites only the
+    days the frame touches, O(batch) not O(table).  A frame with no rows
+    commits nothing.  The frame is unpersisted even when the MERGE raises.
+    Returns ``(rows, snapshot)``; ``snapshot`` is None when nothing was
+    committed."""
+    df = df.withColumn("p_day", F.date_format("window_start", "yyyy-MM-dd")).persist()
+    try:
+        n = df.count()
+        if not n:
+            return 0, None
+        return n, warehouse.merge_upsert(
+            table, df, keys=["key", "window_start"], partition_by="p_day"
         )
-        .select(
-            "key",
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_points",
-            "sum_value",
-            "min_value",
-            "max_value",
-        )
-        .withColumn("avg_value", F.col("sum_value") / F.col("n_points"))
-    )
+    finally:
+        df.unpersist()
 
 
 def write_json_feed(df: DataFrame, out_dir: str, files: int = 6) -> None:
@@ -244,30 +231,20 @@ def run_tier_stream(
     if dict(src.dtypes).get(ts_col) != "timestamp":
         src = src.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     src = src.withColumn("value", F.length(F.col(text_col)).cast("double"))
-    agg = tier_agg_stream(src, tier, key_col=key_col, ts_col=ts_col)
+    # first/last by turn order need arbitrary per-group state, so the stream
+    # carries the algebraic n/sum/min/max (stateful.py keeps first/last)
+    agg = tier_aggregate(
+        src.withWatermark(ts_col, watermark), tier, first_last=False, key_col=key_col, ts_col=ts_col
+    )
 
     log = lineage or LineageLog(warehouse)
     stats = {"batches": 0, "rows_merged": 0}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        # day partition column (Iceberg-style days(window_start)): the MERGE
-        # rewrites only the days this micro-batch touches — O(batch), not
-        # O(table), per commit
-        batch_df = batch_df.withColumn(
-            "p_day", F.date_format("window_start", "yyyy-MM-dd")
-        ).persist()
-        try:
-            n = batch_df.count()
-            if n:
-                snap = warehouse.merge_upsert(
-                    table, batch_df, keys=["key", "window_start"], partition_by="p_day"
-                )
-                log.record_batch(
-                    batch_id, table, "merge", n, n, snap, t0
-                )
-        finally:
-            batch_df.unpersist()
+        n, snap = merge_by_day(warehouse, table, batch_df)
+        if n:
+            log.record_batch(batch_id, table, "merge", n, n, snap, t0)
         stats["batches"] += 1
         stats["rows_merged"] += n
 
@@ -334,36 +311,9 @@ def refresh_tier_cascade(
             "partitions_read": 0,
         }
     fine = warehouse.read(src_table, partitions=selected)
-    w = F.window("window_start", tier_interval(to_tier))
-    agg = (
-        fine.groupBy("key", w.alias("w"))
-        .agg(
-            F.sum("n_points").alias("n_points"),
-            F.sum("sum_value").alias("sum_value"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
-        .select(
-            "key",
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_points",
-            "sum_value",
-            "min_value",
-            "max_value",
-        )
-        .withColumn("avg_value", F.col("sum_value") / F.col("n_points"))
-        .withColumn("p_day", F.date_format("window_start", "yyyy-MM-dd"))
-    )
+    agg = tier_aggregate(fine, to_tier, source="tier", first_last=False)
     t0 = time.time()
-    agg = agg.persist()
-    try:
-        n = agg.count()
-        snap = warehouse.merge_upsert(
-            dst_table, agg, keys=["key", "window_start"], partition_by="p_day"
-        )
-    finally:
-        agg.unpersist()
+    n, snap = merge_by_day(warehouse, dst_table, agg)
     log = lineage or LineageLog(warehouse)
     log.record_batch(-1, dst_table, "cascade_refresh", n, n, snap, t0)
     log.flush(spark)

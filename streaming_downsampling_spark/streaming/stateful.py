@@ -3,7 +3,7 @@
 Two operators the windowed-aggregate path can't express:
 
 * ``stateful_tier_stream`` — tier aggregates INCLUDING first/last by turn
-  order.  ``tier_agg_stream`` (jobs.py) carries only algebraic aggregates
+  order.  ``run_tier_stream`` (jobs.py) carries only algebraic aggregates
   because first/last-by-order need arbitrary per-group state; this operator
   holds exactly that state — (first_ord, first_value, last_ord, last_value)
   plus the algebraic counters — per (key, window_start) across micro-batches.

@@ -66,7 +66,11 @@ def _job_count(spark, fn) -> int:
 def _task_count(spark, fn) -> list[int]:
     """Tasks completed by each stage of the jobs ``fn`` submits, one entry
     per stage: ``max`` is the widest stage, ``sum`` the total.  A stage
-    skipped because it reused a shuffle's output counts 0."""
+    skipped because it reused a shuffle's output counts 0.  Once the status
+    store holds ``spark.ui.retainedStages`` stages it drops skipped stages
+    first (their completion time is -1), so a stage it no longer knows ran
+    no task."""
     tracker = spark.sparkContext.statusTracker()
     stages = {s for j in _new_jobs(spark, fn) for s in tracker.getJobInfo(j).stageIds}
-    return [tracker.getStageInfo(s).numCompletedTasks for s in sorted(stages)]
+    infos = [tracker.getStageInfo(s) for s in sorted(stages)]
+    return [i.numCompletedTasks if i else 0 for i in infos]

@@ -1,12 +1,14 @@
-"""Scalar reference implementations the package's batched kernels are tested
-against: a Gorilla bit writer and timestamp reader, the per-chunk checksum,
-and the one-series attention scorer and model pipeline.  The package keeps
-only the batched forms (plus the scalar XOR reader, its fallback for '10'
-records)."""
+"""Reference implementations the package's operators are tested against: a
+Gorilla bit writer and timestamp reader, the per-chunk checksum, the
+one-series attention scorer and model pipeline, and min-label propagation
+connected components.  The package keeps only the batched kernels (plus the
+scalar XOR reader, its fallback for '10' records) and the large-star/
+small-star components."""
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import DataFrame, functions as F
 
 from streaming_downsampling_spark.functions import gorilla as G
 from streaming_downsampling_spark.functions import kernels as K
@@ -172,3 +174,89 @@ def model_downsample_scalar(
         np.concatenate(sel_all),
         np.concatenate(idx_all),
     )
+
+
+def connected_components(
+    pairs: DataFrame,
+    id_a: str = "doc_a",
+    id_b: str = "doc_b",
+    max_iter: int = 25,
+) -> DataFrame:
+    """Reference connected components by min-label propagation, the oracle
+    for ``dedup.connected_components_star`` (same output: every node with
+    the min node id of its component).
+
+    Each round every node adopts the minimum label among itself and its
+    neighbors.  Rounds are O(component diameter): ``max_iter`` bounds
+    adversarial chains and raises past it.  Each round is two hash-key
+    shuffles; labels are eagerly localCheckpoint-ed per round, which both
+    materializes them AND truncates the logical plan — a bare persist
+    caches data but the plan still nests (measured 4x plan-string growth
+    per round: exponential analysis cost that OOMs the driver near round
+    10 on chain graphs), and the checkpoint blocks are GC-scoped so a
+    catalog run leaves the storage pool clean.  Convergence check = count
+    of changed labels (no full-table sums that could overflow).
+
+    Output: (node, component) for every node appearing in ``pairs``.  A
+    pair with a NULL id is no edge and contributes no node.
+    """
+    if max_iter < 1:
+        # the for/else convergence check below reads `changed`, which is only
+        # bound inside the loop — a zero-round call must fail loudly up front
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    pairs = pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
+    e = (
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .unionByName(
+            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+        )
+        .distinct()
+        # the edge set is read once per round: materialize it, or every
+        # round recomputes the whole upstream candidate pipeline
+        .localCheckpoint(eager=True)
+    )
+    labels = (
+        e.select(F.col("src").alias("node")).distinct()
+        .withColumn("component", F.col("node"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(max_iter):
+        nbr_min = (
+            e.join(labels, e.src == labels.node)
+            .groupBy("dst")
+            .agg(F.min("component").alias("nbr_component"))
+        )
+        new_labels = (
+            labels.join(nbr_min, labels.node == nbr_min.dst, "left")
+            .select(
+                "node",
+                F.least(
+                    F.col("component"),
+                    F.coalesce("nbr_component", F.col("component")),
+                ).alias("component"),
+            )
+            # lazy: the changed-count action right below is the first read,
+            # so it materializes the round's labels and counts the moved
+            # ones in ONE job instead of checkpoint-then-count
+            .localCheckpoint(eager=False)
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "node")
+            .filter(F.col("n.component") != F.col("o.component"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
+    else:
+        # exhausting max_iter with labels still moving means a component
+        # wider than max_iter hops — silently returning split clusters is a
+        # correctness trap.  Chain-shaped graphs need the O(log n)-round
+        # large-star/small-star variant (Kiveris 2014).
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            f"({changed} labels still changing); a component's diameter "
+            "exceeds max_iter — raise max_iter or use a log-round variant"
+        )
+    return labels

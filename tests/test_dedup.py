@@ -8,10 +8,9 @@ from pyspark.sql import functions as F
 def test_null_id_pair_gives_no_component_row(spark):
     """A pair with one NULL id is no edge: neither connected-components
     variant may turn it into a self-pair that labels its other node."""
-    from streaming_downsampling_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from scalar_oracles import connected_components
+
+    from streaming_downsampling_spark.operators.dedup import connected_components_star
 
     pairs = spark.createDataFrame(
         [(1, 2), (5, None), (None, 6), (None, None)], "doc_a long, doc_b long"

@@ -17,7 +17,12 @@ from streaming_downsampling_spark.operators.downsample import (
     downsample_select,
 )
 from streaming_downsampling_spark.operators.gapfill import gapfill
-from streaming_downsampling_spark.operators.rollup import cascade, rollup
+from streaming_downsampling_spark.operators.rollup import (
+    cascade,
+    rollup,
+    tier_interval,
+    tier_seconds,
+)
 
 
 @pytest.fixture(scope="module")
@@ -45,7 +50,7 @@ def _spark_rollup_pdf(df, tier):
     return out.reset_index(drop=True)
 
 
-@pytest.mark.parametrize("tier", ["1m", "1h", "1d"])
+@pytest.mark.parametrize("tier", ["1m", "1h", "1d", "15m", "5 minutes", "12h"])
 def test_rollup_matches_oracle(transcripts, opdf, tier):
     got = _spark_rollup_pdf(rollup(transcripts, tier), tier)
     exp = (
@@ -55,6 +60,22 @@ def test_rollup_matches_oracle(transcripts, opdf, tier):
     )
     exp["n_points"] = exp["n_points"].astype("int64")
     pd.testing.assert_frame_equal(got[exp.columns], exp, check_exact=True)
+
+
+@pytest.mark.parametrize(
+    "tier,interval,seconds",
+    [("15m", "15 minutes", 900), ("5 minutes", "5 minutes", 300),
+     ("12h", "12 hours", 43200), ("1d", "1 day", 86400)],
+)
+def test_tier_spec_grammar(tier, interval, seconds):
+    assert tier_interval(tier) == interval
+    assert tier_seconds(tier) == seconds
+
+
+def test_bad_tier_spec_raises_from_both_parsers():
+    for parse in (tier_interval, tier_seconds):
+        with pytest.raises(ValueError, match="unknown tier"):
+            parse("3 fortnights")
 
 
 def test_cascade_equals_direct(transcripts):

@@ -4,6 +4,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from scalar_oracles import connected_components
 
 from streaming_downsampling_spark.operators import dedup as D
 from streaming_downsampling_spark.operators import similarity as S
@@ -166,7 +167,7 @@ def test_compress_roundtrip_bitexact(spark, transcripts):
 
 
 def test_connected_components_chain_and_islands(spark):
-    """Min-label propagation must resolve transitive chains (1-2-3-4),
+    """Both components operators must resolve transitive chains (1-2-3-4),
     separate islands, and leave unpaired nodes out of the edge set."""
     import pandas as pd
 
@@ -175,11 +176,9 @@ def test_connected_components_chain_and_islands(spark):
             {"doc_a": [2, 3, 1, 10], "doc_b": [3, 4, 2, 11]}
         )
     )
-    got = {
-        r["node"]: r["component"]
-        for r in D.connected_components(pairs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    for cc in (connected_components, D.connected_components_star):
+        got = {r["node"]: r["component"] for r in cc(pairs).collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}, cc.__name__
 
 
 def test_dedup_components_canonical_ids(spark, docs):

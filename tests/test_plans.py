@@ -48,6 +48,20 @@ def test_exact_dedup_is_single_shuffle(q):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
+def test_tier_cascade_is_one_shuffle_per_tier(transcripts):
+    """rollup → cascade('1h') → cascade('1d') shuffles once per tier: each
+    tier is partial agg, exchange, final agg on (key, window).  Three
+    exchanges before the run, three shuffle query stages in AQE's final
+    plan; a fourth means a tier lost its map-side combine or re-shuffled."""
+    from streaming_downsampling_spark.operators.rollup import cascade, rollup
+
+    r1d = cascade(cascade(rollup(transcripts, "1m"), "1h"), "1d")
+    assert _plan(r1d).count("Exchange hashpartitioning") == 3
+    r1d.collect()
+    final = _plan(r1d).split("== Initial Plan ==")[0]
+    assert final.count("ShuffleQueryStage") == 3
+
+
 def test_top_revenue_broadcasts_customer(q):
     """The small customer dimension must broadcast; the big fact join keys
     shuffle.  A shuffle of the dim side would add a pointless stage, a

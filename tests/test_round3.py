@@ -329,7 +329,7 @@ def test_star_cc_matches_union_find(spark):
 
 
 def test_connected_components_raises_when_unconverged(spark):
-    from streaming_downsampling_spark.operators.dedup import connected_components
+    from scalar_oracles import connected_components
 
     chain = spark.createDataFrame(
         pd.DataFrame({"doc_a": list(range(9)), "doc_b": list(range(1, 10))})

@@ -36,7 +36,7 @@ def test_merge_upsert_boolean_partition(spark, tmp_path):
 def test_connected_components_rejects_nonpositive_max_iter(spark):
     """Round-3 ADVICE (low): max_iter <= 0 used to surface as a NameError
     from the for/else convergence check instead of a clear error."""
-    from streaming_downsampling_spark.operators.dedup import connected_components
+    from scalar_oracles import connected_components
 
     pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
     with pytest.raises(ValueError, match="max_iter"):

@@ -64,10 +64,9 @@ def test_star_cc_keeps_self_pair_only_nodes(spark):
     """connected_components_star promises 'every node appearing in pairs'
     like the propagation variant, but its u != v edge filter used to drop
     a node whose only appearance is a self-pair (x, x)."""
-    from streaming_downsampling_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from scalar_oracles import connected_components
+
+    from streaming_downsampling_spark.operators.dedup import connected_components_star
 
     pairs = spark.createDataFrame(
         [(1, 2), (7, 7), (3, 3), (2, 3)], "doc_a long, doc_b long"
@@ -302,6 +301,8 @@ def test_lsh_star_mode_same_components_and_linear_edges(spark):
     bucket minimum) while emitting k-1 edges per bucket instead of
     k(k-1)/2 — including on a pathological hot bucket (many identical
     docs), the shape that kills the quadratic expansion at corpus scale."""
+    from scalar_oracles import connected_components
+
     from streaming_downsampling_spark.operators import dedup as D
 
     rows = [(i, "the quick brown fox jumps over the lazy dog") for i in range(40)]
@@ -321,7 +322,7 @@ def test_lsh_star_mode_same_components_and_linear_edges(spark):
     assert n_star <= 4 * (40 + 2)  # <= (k-1) per bucket per band
 
     def comps(edges):
-        out = D.connected_components(edges)
+        out = connected_components(edges)
         return {(r["node"], r["component"]) for r in out.collect()}
 
     assert comps(star) == comps(pairs)

@@ -260,6 +260,39 @@ def test_refresh_tier_cascade_matches_batch(spark, wh, tmp_path, stream_source):
     pd.testing.assert_frame_equal(got2, exp, check_exact=True)
 
 
+def test_tier_outputs_keep_columns_and_types(spark, wh, tmp_path, stream_source):
+    """Pins every tier output's column names, order and types: the batch
+    ``rollup`` and ``cascade`` frames, and the stream and refresh tables as
+    their manifests record them.  A Warehouse commit that changes a stored
+    column's type raises, so these must not move."""
+    import json
+
+    from streaming_downsampling_spark.operators.rollup import cascade
+    from streaming_downsampling_spark.streaming.jobs import refresh_tier_cascade
+
+    src_dir, _ = stream_source
+    head = [("key", "string"), ("window_start", "timestamp"), ("window_end", "timestamp")]
+    algebra = [("sum_value", "double"), ("min_value", "double"), ("max_value", "double")]
+    batch = head + [("n_points", "bigint")] + algebra + [
+        ("first_value", "double"), ("last_value", "double"), ("avg_value", "double")
+    ]
+    r1m = rollup(with_signal(spark.read.parquet(src_dir)), "1m")
+    assert r1m.dtypes == batch
+    assert cascade(r1m, "1h").dtypes == batch
+
+    run_tier_stream(spark, src_dir, str(tmp_path / "ck"), wh, table="s1m", watermark="3650 days")
+    refresh_tier_cascade(spark, wh, "s1m", "s1h")
+    stored = head + [("n_points", "long")] + algebra + [
+        ("avg_value", "double"), ("p_day", "string")
+    ]
+    for t in ("s1m", "s1h"):
+        with open(os.path.join(wh.root, t, "metadata.json")) as f:
+            meta = json.load(f)
+        (entry,) = [s for s in meta["snapshots"] if s["id"] == meta["current"]]
+        assert [(c["name"], c["type"]) for c in entry["schema"]["fields"]] == stored, t
+        assert entry["partition_by"] == "p_day", t
+
+
 def test_json_wire_stream_matches_batch(spark, wh, tmp_path, stream_source):
     """The reference's JSON wire format end-to-end: produce turns as JSON
     files (serializer: non-finite → 0.0), consume with the json streaming
@@ -425,6 +458,23 @@ def test_refresh_tier_cascade_with_nothing_to_refresh(spark, wh):
     out = refresh_tier_cascade(spark, wh, "t1m", "t1h")
     assert out == {"rows": 0, "snapshot": first["snapshot"], "partitions_read": 0}
     assert wh.snapshots("t1h") == snaps
+
+
+def test_merge_by_day_unpersists_when_merge_raises(spark, wh, monkeypatch):
+    """The shared tier sink caches its batch for the count and the MERGE; a
+    MERGE that raises must not leave the batch cached."""
+    from streaming_downsampling_spark.streaming.jobs import merge_by_day
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(wh, "merge_upsert", fail)
+    rows = _tier_rows(spark, ["2024-01-01"]).drop("p_day")
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(cached().keySet())
+    with pytest.raises(RuntimeError, match="merge failed"):
+        merge_by_day(wh, "t1m", rows)
+    assert set(cached().keySet()) == before
 
 
 def test_cascade_refresh_and_flush_spark_work_is_capped(spark, wh):
