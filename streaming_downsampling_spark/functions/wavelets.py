@@ -147,9 +147,3 @@ def idwt(cA: np.ndarray, cD: np.ndarray, wavelet: str = "db4") -> np.ndarray:
     if squeeze:
         return rec[0]
     return rec
-
-
-def wavedec1(x: np.ndarray, wavelet: str = "db4") -> tuple[np.ndarray, np.ndarray]:
-    """Level-1 wavedec, the exact configuration the reference uses
-    (/root/reference/main.py:102-109: wavelet='db4', dwt_level=1)."""
-    return dwt(x, wavelet)

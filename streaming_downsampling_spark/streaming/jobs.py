@@ -150,9 +150,8 @@ def build_stream_source(
             ).alias("r")
         ).select("r.*")
     if schema is None:
-        # file feeds CAN infer: one batch read of the directory, exactly
-        # what run_tier_stream does — instead of pyspark's opaque
-        # TypeError from readStream.schema(None)
+        # file feeds CAN infer: one batch read of the directory, instead
+        # of pyspark's opaque TypeError from readStream.schema(None)
         schema = spark.read.format(source_format).load(source_dir).schema
     reader = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", max_files_per_trigger
@@ -210,13 +209,6 @@ def run_tier_stream(
     per trigger would need a new checkpoint with more partitions, sized on a
     benchmark workload of that shape.
     """
-    if schema is None:
-        if source_format == "kafka":
-            raise ValueError(
-                "run_tier_stream(source_format='kafka') needs an explicit "
-                "schema: Kafka value bytes carry no schema to infer from"
-            )
-        schema = spark.read.format(source_format).load(source_dir).schema
     src = build_stream_source(
         spark,
         source_dir,
