@@ -810,8 +810,8 @@ def _replay(spark, sf_dir, tag, frames):
     its own one-file commit, written after the previous one finished.  One
     write of several files gives them near-equal mtimes and replays them in
     whichever order their tasks finished: once the latest-ts file replayed
-    first, jumped a real watermark past the other batches and silently
-    dropped them as late."""
+    first, its watermark jumped past the other batches and silently dropped
+    them as late."""
     src = _scratch_dir(sf_dir, tag)
     for i, f in enumerate(frames):
         f.coalesce(1).write.mode("append" if i else "overwrite").parquet(src)
