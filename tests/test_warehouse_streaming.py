@@ -610,6 +610,75 @@ def test_compact_rewrites_only_fragmented_partitions(spark, wh):
     assert sorted(wh.read("pt").select(*base.columns).collect()) == expected
 
 
+def test_layout_transitions_pinned(spark, wh):
+    """Every commit across the layout transitions records its op, rows,
+    ``partition_by``, dirs per partition key and columns, and reads back
+    its rows: a day MERGE onto a table created unpartitioned (a whole
+    rewrite, then a scoped one), unpartitioned MERGEs, an unpartitioned
+    append onto a day-partitioned table followed by a day MERGE, and
+    append → append_rows → compact(day) → expire_partitions → compact()."""
+    from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
+
+    d1, d2, d3 = days = ["2024-01-01", "2024-01-02", "2024-01-03"]
+    cols, by_day = ["key", "day", "v"], {d1: 1, d2: 1, d3: 1}
+
+    def rows(keys, tag=0.0):
+        return [(k, days[k % 3], k + tag) for k in keys]
+
+    def frame(keys, tag=0.0):
+        return spark.createDataFrame(rows(keys, tag), "key long, day string, v double")
+
+    w_schema = StructType(
+        [StructField(c, t) for c, t in zip([*cols, "w"], [LongType(), StringType(), DoubleType(), DoubleType()])]
+    )
+    with_w = [(*r, None) for r in rows(range(4))] + [(4, d2, 4.0, 0.5)]
+    steps = [
+        # a MERGE by day onto a table created unpartitioned, then again
+        (lambda: wh.overwrite("a", frame(range(6))), "a",
+         ("overwrite", 6, None, {"*": 1}, cols), rows(range(6))),
+        (lambda: wh.merge_upsert("a", frame([1, 6], 0.5), ["key"], partition_by="day"), "a",
+         ("merge", 7, "day", by_day, cols), rows([0, 2, 3, 4, 5]) + rows([1, 6], 0.5)),
+        (lambda: wh.merge_upsert("a", frame([2, 7], 0.25), ["key"], partition_by="day"), "a",
+         ("merge", 5, "day", by_day, cols),
+         rows([0, 3, 4, 5]) + rows([1, 6], 0.5) + rows([2, 7], 0.25)),
+        # unpartitioned MERGE into a new table, then onto it
+        (lambda: wh.merge_upsert("b", frame([0, 1, 2]), ["key"]), "b",
+         ("merge", 3, None, {"*": 1}, cols), rows([0, 1, 2])),
+        (lambda: wh.merge_upsert("b", frame([1, 3], 0.5), ["key"]), "b",
+         ("merge", 4, None, {"*": 1}, cols), rows([0, 2]) + rows([1, 3], 0.5)),
+        # an unpartitioned append onto a day-partitioned table, then a day MERGE
+        (lambda: wh.overwrite("c", frame(range(6)), partition_by="day"), "c",
+         ("overwrite", 6, "day", by_day, cols), rows(range(6))),
+        (lambda: wh.append("c", frame([6, 7])), "c",
+         ("append", 2, None, {"*": 1, **by_day}, cols), rows(range(8))),
+        (lambda: wh.merge_upsert("c", frame([0, 7, 8], 0.5), ["key"], partition_by="day"), "c",
+         ("merge", 9, "day", by_day, cols), rows(range(1, 7)) + rows([0, 7, 8], 0.5)),
+        # append → append_rows → compact(day) → expire_partitions → compact()
+        (lambda: wh.append("d", frame(range(4))), "d",
+         ("append", 4, None, {"*": 1}, cols), rows(range(4))),
+        (lambda: wh.append_rows("d", [(4, d2, 4.0, 0.5)], w_schema), "d",
+         ("append", 1, None, {"*": 2}, [*cols, "w"]), with_w),
+        (lambda: wh.compact("d", partition_by="day"), "d",
+         ("compact", 5, "day", by_day, [*cols, "w"]), with_w),
+        (lambda: wh.expire_partitions("d", before=d2), "d",
+         ("expire_partitions", 0, "day", {d2: 1, d3: 1}, [*cols, "w"]),
+         [r for r in with_w if r[1] != d1]),
+        (lambda: wh.compact("d"), "d",
+         ("compact", 3, None, {"*": 1}, [*cols, "w"]), [r for r in with_w if r[1] != d1]),
+    ]
+    for i, (step, table, layout, expected) in enumerate(steps):
+        snap = step()
+        e = wh.snapshots(table)[-1]
+        assert e["id"] == snap == wh.current_snapshot(table), i
+        got = (
+            e["op"], e["rows"], e["partition_by"],
+            {p: len(ds) for p, ds in e["parts"].items()},
+            [f["name"] for f in e["schema"]["fields"]],
+        )
+        assert got == layout, i
+        assert sorted(tuple(r) for r in wh.read(table).collect()) == sorted(expected), i
+
+
 def test_read_takes_schema_from_manifest(spark, wh):
     """Reads take the schema the manifest records: no Spark job, an added
     column reads as NULL on older partitions, and a type change fails at
