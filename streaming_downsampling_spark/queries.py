@@ -847,19 +847,25 @@ def _replay_events(spark, sf_dir, tag, sentinel):
     return _replay(spark, sf_dir, tag, frames)
 
 
-def _run_bounded(spark, writer, name, state_parts):
-    """Start ``writer`` as an ``availableNow`` query with ``state_parts``
-    state-store partitions (fixed per checkpoint at its first start; more
-    just multiply tiny checkpoint files per micro-batch) and run it to
-    completion, stopping it after 600 s."""
-    with stream_partitions(spark, state_parts):
+# State-store partitions of every bounded catalog stream, fixed per
+# checkpoint at its first start.  More just multiply tiny checkpoint files per
+# micro-batch: at sf0.001, 16 ran ``stateful_tier`` in 6.0/5.0 s against
+# 3.6/3.3 s for 8, with the same rows.
+_STATE_PARTS = 8
+
+
+def _run_bounded(spark, writer, name):
+    """Start ``writer`` as an ``availableNow`` query with ``_STATE_PARTS``
+    state-store partitions and run it to completion, stopping it after
+    600 s."""
+    with stream_partitions(spark, _STATE_PARTS):
         q = writer.trigger(availableNow=True).start()
     if not q.awaitTermination(600):
         q.stop()
         raise TimeoutError(f"bounded stream {name!r} did not finish within 600s")
 
 
-def _run_to_memory_sink(spark, out, name, mode="update", state_parts="16"):
+def _run_to_memory_sink(spark, out, name, mode="update"):
     """Run the bounded stream ``out`` into the memory table ``name``,
     replacing any previous run of that name, and return the table.  In
     update mode it holds every emission (the caller keeps the final one per
@@ -869,7 +875,7 @@ def _run_to_memory_sink(spark, out, name, mode="update", state_parts="16"):
             q.stop()
     spark.catalog.dropTempView(name)
     writer = out.writeStream.format("memory").queryName(name).outputMode(mode)
-    _run_bounded(spark, writer, name, state_parts)
+    _run_bounded(spark, writer, name)
     return spark.table(name)
 
 
@@ -1304,9 +1310,7 @@ def q_stream_dedup(spark, sf_dir):
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "value")
     )
-    return _run_to_memory_sink(
-        spark, out, "stream_dedup_mem", "append", "8"
-    )
+    return _run_to_memory_sink(spark, out, "stream_dedup_mem", "append")
 
 
 SQL_STREAM_DEDUP = """
@@ -1345,9 +1349,7 @@ def q_stream_sessionize(spark, sf_dir):
         )
         .filter(F.col("user_id") >= 0)
     )
-    return _run_to_memory_sink(
-        spark, out, "stream_sessionize_mem", "append", "8"
-    )
+    return _run_to_memory_sink(spark, out, "stream_sessionize_mem", "append")
 
 
 SQL_STREAM_SESSIONIZE = (
@@ -1394,9 +1396,7 @@ def q_stream_rollup_1h(spark, sf_dir):
         )
         .filter(F.col("event_type") != "__sentinel__")
     )
-    return _run_to_memory_sink(
-        spark, out, "stream_rollup_1h_mem", "append", "8"
-    )
+    return _run_to_memory_sink(spark, out, "stream_rollup_1h_mem", "append")
 
 
 SQL_STREAM_ROLLUP_1H = """
@@ -2285,30 +2285,21 @@ def q_downsample_error_bench(spark, sf_dir):
     )
 
 
-def q_model_haar_parity(spark, sf_dir):
-    """Flagship model pipeline with a real driver oracle (the first two
-    rounds only had rows-only checks here).  The Haar variant's pooled
-    approximation and detail coefficients are pure pairwise arithmetic —
-    cA=(x₂ᵢ+x₂ᵢ₊₁)/√2, cD=(x₂ᵢ−x₂ᵢ₊₁)/√2, pooled=(cA₂ⱼ+cA₂ⱼ₊₁)/2
-    (/root/reference/core/downsampling_algorithm2.py:304-315 with
-    wavelet='haar') — so DuckDB recomputes them from the raw table.  Checked
-    per (event_type, day) group:
-
-    * shape laws: n_pooled = Σ_seg len_cA//2 and
-      n_detail = Σ_seg max(1, round(0.8·len_cD)) under the reference's
-      200-point segmentation (/root/reference/main.py:106);
-    * pooled VALUES: rounded sum + first/last element;
-    * detail VALUES: every attention-selected coefficient is a member of the
-      relationally-computed cD multiset (``n_detail_matched == n_detail``).
-      Only the attention *ranking* stays pytest-only
-      (tests/test_kernels.py) — it has no SQL twin.
-    """
+def _model_parity(spark, sf_dir, wavelet, cd_multiset):
+    """The Spark side of the model parity queries: ``downsample_model``
+    with ``wavelet`` per (event_type, day), its shape and pooled scalars,
+    and ``n_detail_matched``, how many of its selected detail values are
+    members of the relational cD multiset.  ``cd_multiset(rows)`` maps the
+    cleaned, numbered event rows (``key, window_start, v, event_id, rn0,
+    seg``; ``seg`` is the reference's 200-point segment) to ``(key,
+    window_start, cd6, cnt_all)``: each cD rounded to 6 places and its
+    count, from the same arithmetic the oracle runs."""
     from pyspark.sql import Window
 
     ev = _t(spark, sf_dir, "events")
     out = downsample_model(
         ev, window="1 day", key_col="event_type", ts_col="ts",
-        value_col="value", order_col="event_id", wavelet="haar",
+        value_col="value", order_col="event_id", wavelet=wavelet,
     )
     # parity-gate query: the model output feeds two branches (scalars +
     # membership explode); eager localCheckpoint materializes the kernel
@@ -2336,9 +2327,6 @@ def q_model_haar_parity(spark, sf_dir):
         ),
         "detail_values",
     ).localCheckpoint(eager=True)
-    # relational Haar cD multiset from the same raw rows (the arithmetic the
-    # oracle runs), to verify the kernel's selected values are true
-    # coefficients: multiset-count membership join
     clean = F.when(
         F.col("value").isNull()
         | F.isnan("value")
@@ -2355,35 +2343,8 @@ def q_model_haar_parity(spark, sf_dir):
         )
         .withColumn("rn0", (F.row_number().over(wn) - 1).cast("long"))
         .withColumn("seg", F.expr("rn0 div 200"))
-        .withColumn("sp", F.expr("(rn0 % 200) div 2"))
     )
-    pairs = rows.groupBy("key", "window_start", "seg", "sp").agg(
-        F.min_by("v", "rn0").alias("v1"),
-        F.max_by("v", "rn0").alias("v2"),
-        F.count(F.lit(1)).alias("c"),
-    )
-    # the kernel drops trailing segments shorter than 2 points; the first
-    # segment (whole short groups) always runs
-    seg_keep = (
-        pairs.groupBy("key", "window_start", "seg")
-        .agg(F.sum("c").alias("seg_len"))
-        .filter((F.col("seg_len") >= 2) | (F.col("seg") == 0))
-    )
-    cd = (
-        pairs.join(seg_keep, ["key", "window_start", "seg"])
-        .withColumn(
-            "cd6",
-            F.round(
-                F.when(
-                    F.col("c") == 2,
-                    (F.col("v1") - F.col("v2")) / F.sqrt(F.lit(2.0)),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ),
-        )
-        .groupBy("key", "window_start", "cd6")
-        .agg(F.count(F.lit(1)).alias("cnt_all"))
-    )
+    # multiset-count membership join of the selected values into cD
     sel = (
         model.select("key", "window_start", F.explode("detail_values").alias("dv"))
         .withColumn("cd6", F.round("dv", 6))
@@ -2391,7 +2352,7 @@ def q_model_haar_parity(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("cnt_sel"))
     )
     matched = (
-        sel.join(cd, ["key", "window_start", "cd6"], "left")
+        sel.join(cd_multiset(rows), ["key", "window_start", "cd6"], "left")
         .groupBy("key", "window_start")
         .agg(
             F.sum(F.least("cnt_sel", F.coalesce("cnt_all", F.lit(0)))).alias(
@@ -2415,6 +2376,61 @@ def q_model_haar_parity(spark, sf_dir):
             "pooled_first",
             "pooled_last",
         )
+    )
+
+
+def q_model_haar_parity(spark, sf_dir):
+    """Flagship model pipeline with a real driver oracle (the first two
+    rounds only had rows-only checks here).  The Haar variant's pooled
+    approximation and detail coefficients are pure pairwise arithmetic —
+    cA=(x₂ᵢ+x₂ᵢ₊₁)/√2, cD=(x₂ᵢ−x₂ᵢ₊₁)/√2, pooled=(cA₂ⱼ+cA₂ⱼ₊₁)/2
+    (/root/reference/core/downsampling_algorithm2.py:304-315 with
+    wavelet='haar') — so DuckDB recomputes them from the raw table.  Checked
+    per (event_type, day) group:
+
+    * shape laws: n_pooled = Σ_seg len_cA//2 and
+      n_detail = Σ_seg max(1, round(0.8·len_cD)) under the reference's
+      200-point segmentation (/root/reference/main.py:106);
+    * pooled VALUES: rounded sum + first/last element;
+    * detail VALUES: every attention-selected coefficient is a member of the
+      relationally-computed cD multiset (``n_detail_matched == n_detail``).
+      Only the attention *ranking* stays pytest-only
+      (tests/test_kernels.py) — it has no SQL twin.
+    """
+    return _model_parity(spark, sf_dir, "haar", _haar_cd_multiset)
+
+
+def _haar_cd_multiset(rows):
+    """The relational Haar cD multiset: cD=(x₂ᵢ−x₂ᵢ₊₁)/√2 over each
+    segment's pairs, 0 for an unpaired last point."""
+    pairs = rows.withColumn("sp", F.expr("(rn0 % 200) div 2")).groupBy(
+        "key", "window_start", "seg", "sp"
+    ).agg(
+        F.min_by("v", "rn0").alias("v1"),
+        F.max_by("v", "rn0").alias("v2"),
+        F.count(F.lit(1)).alias("c"),
+    )
+    # the kernel drops trailing segments shorter than 2 points; the first
+    # segment (whole short groups) always runs
+    seg_keep = (
+        pairs.groupBy("key", "window_start", "seg")
+        .agg(F.sum("c").alias("seg_len"))
+        .filter((F.col("seg_len") >= 2) | (F.col("seg") == 0))
+    )
+    return (
+        pairs.join(seg_keep, ["key", "window_start", "seg"])
+        .withColumn(
+            "cd6",
+            F.round(
+                F.when(
+                    F.col("c") == 2,
+                    (F.col("v1") - F.col("v2")) / F.sqrt(F.lit(2.0)),
+                ).otherwise(F.lit(0.0)),
+                6,
+            ),
+        )
+        .groupBy("key", "window_start", "cd6")
+        .agg(F.count(F.lit(1)).alias("cnt_all"))
     )
 
 
@@ -2533,56 +2549,15 @@ def q_model_db4_parity(spark, sf_dir):
     The DuckDB oracle runs the identical tap sums (same literals, same
     association order → bit-identical doubles) via list_transform.
     """
-    from pyspark.sql import Window
+    return _model_parity(spark, sf_dir, "db4", _db4_cd_multiset)
 
-    rec_lo, rec_hi = _db4_taps()
-    ev = _t(spark, sf_dir, "events")
-    out = downsample_model(
-        ev, window="1 day", key_col="event_type", ts_col="ts",
-        value_col="value", order_col="event_id", wavelet="db4",
-    )
-    model = out.select(
-        "key",
-        "window_start",
-        F.col("n").cast("long").alias("n"),
-        F.size("pooled_approx").cast("long").alias("n_pooled"),
-        F.size("detail_values").cast("long").alias("n_detail"),
-        F.round(
-            F.aggregate("pooled_approx", F.lit(0.0), lambda a, x: a + x), 4
-        ).alias("pooled_sum"),
-        # try_element_at, not element_at: a tiny group can pool to an EMPTY
-        # approximation (haar: a 2-point group's 1-coefficient cA under
-        # factor-2 floor-division pooling — hit at sf0.001 group sizes) and
-        # strict element_at raises on it; the oracle's LEFT JOIN yields
-        # NULL for exactly those windows, so NULL-on-empty matches
-        F.round(F.try_element_at("pooled_approx", F.lit(1)), 6).alias(
-            "pooled_first"
-        ),
-        F.round(F.try_element_at("pooled_approx", F.lit(-1)), 6).alias(
-            "pooled_last"
-        ),
-        "detail_values",
-    ).localCheckpoint(eager=True)
-    clean = F.when(
-        F.col("value").isNull()
-        | F.isnan("value")
-        | (F.abs("value") == float("inf")),
-        F.lit(0.0),
-    ).otherwise(F.col("value"))
-    wn = Window.partitionBy("key", "window_start").orderBy("event_id")
-    rows = (
-        ev.select(
-            F.col("event_type").cast("string").alias("key"),
-            F.date_trunc("day", "ts").alias("window_start"),
-            clean.alias("v"),
-            "event_id",
-        )
-        .withColumn("rn0", (F.row_number().over(wn) - 1).cast("long"))
-        .withColumn("seg", F.expr("rn0 div 200"))
-        .withColumn("rns", F.expr("rn0 % 200"))
-    )
+
+def _db4_cd_multiset(rows):
+    """The relational db4 cD multiset: per segment, the sorted values as
+    one array and every cD as its 8-term tap sum (``_db4_tap_chain``)."""
     segs = (
-        rows.groupBy("key", "window_start", "seg")
+        rows.withColumn("rns", F.expr("rn0 % 200"))
+        .groupBy("key", "window_start", "seg")
         .agg(
             F.expr("transform(array_sort(collect_list(struct(rns, v))), s -> s.v)").alias("arr"),
             F.count(F.lit(1)).alias("nseg"),
@@ -2592,57 +2567,16 @@ def q_model_db4_parity(spark, sf_dir):
         .filter((F.col("nseg") >= 2) | (F.col("seg") == 0))
         .withColumn("m", F.expr("(nseg + 7) div 2"))
     )
-    ca_chain = _db4_tap_chain("arr", "nseg", "i", rec_lo, "spark")
-    cd_chain = _db4_tap_chain("arr", "nseg", "i", rec_hi, "spark")
-    coeff = segs.select(
-        "key", "window_start", "seg", "m",
-        F.expr(f"transform(sequence(0, cast(m as int) - 1), i -> {ca_chain})").alias("ca"),
-        F.expr(f"transform(sequence(0, cast(m as int) - 1), i -> {cd_chain})").alias("cd"),
-    ).withColumn(
-        "pl",
-        F.expr(
-            "transform(sequence(0, cast(m div 2 as int) - 1),"
-            " j -> (element_at(ca, cast(2*j+1 as int))"
-            "       + element_at(ca, cast(2*j+2 as int))) / 2.0)"
-        ),
-    )
-    cd_rel = (
-        coeff.select("key", "window_start", F.explode("cd").alias("cdv"))
+    cd_chain = _db4_tap_chain("arr", "nseg", "i", _db4_taps()[1], "spark")
+    return (
+        segs.select(
+            "key", "window_start",
+            F.expr(f"transform(sequence(0, cast(m as int) - 1), i -> {cd_chain})").alias("cd"),
+        )
+        .select("key", "window_start", F.explode("cd").alias("cdv"))
         .withColumn("cd6", F.round("cdv", 6))
         .groupBy("key", "window_start", "cd6")
         .agg(F.count(F.lit(1)).alias("cnt_all"))
-    )
-    sel = (
-        model.select("key", "window_start", F.explode("detail_values").alias("dv"))
-        .withColumn("cd6", F.round("dv", 6))
-        .groupBy("key", "window_start", "cd6")
-        .agg(F.count(F.lit(1)).alias("cnt_sel"))
-    )
-    matched = (
-        sel.join(cd_rel, ["key", "window_start", "cd6"], "left")
-        .groupBy("key", "window_start")
-        .agg(
-            F.sum(F.least("cnt_sel", F.coalesce("cnt_all", F.lit(0)))).alias(
-                "n_detail_matched"
-            )
-        )
-    )
-    return (
-        model.drop("detail_values")
-        .join(matched, ["key", "window_start"], "left")
-        .select(
-            "key",
-            "window_start",
-            "n",
-            "n_pooled",
-            "n_detail",
-            F.coalesce("n_detail_matched", F.lit(0))
-            .cast("long")
-            .alias("n_detail_matched"),
-            "pooled_sum",
-            "pooled_first",
-            "pooled_last",
-        )
     )
 
 
@@ -3638,7 +3572,7 @@ def q_stream_tier_cascade(spark, sf_dir):
         .option("checkpointLocation", f"{root}/ckpt")
         .foreachBatch(lambda batch_df, _: merge_by_day(wh, "tier_1h", batch_df))
     )
-    _run_bounded(spark, writer, "stream_tier_cascade", 8)
+    _run_bounded(spark, writer, "stream_tier_cascade")
     refresh_tier_cascade(spark, wh, "tier_1h", "tier_1d", to_tier="1d")
     return wh.read("tier_1d").select(
         "key",

@@ -679,6 +679,35 @@ def test_layout_transitions_pinned(spark, wh):
         assert sorted(tuple(r) for r in wh.read(table).collect()) == sorted(expected), i
 
 
+def test_merge_onto_another_layout_rewrites_the_whole_table(spark, wh):
+    """A day MERGE onto a manifest that mixes day- and key-partitioned dirs
+    (recorded ``partition_by`` ``None``), or onto one partitioned by
+    another column, rewrites every partition: no stored copy of a batch key
+    survives, and the snapshot records ``partition_by`` again."""
+    days = ["2024-01-01", "2024-01-02", "2024-01-03"]
+
+    def rows(keys, tag=0.0):
+        return [(k, days[k % 3], k + tag) for k in keys]
+
+    def frame(keys, tag=0.0):
+        return spark.createDataFrame(rows(keys, tag), "key long, day string, v double")
+
+    expected = sorted(rows([1, 2, 4]) + rows([0, 3, 5], 0.25))
+    wh.overwrite("m", frame(range(6)), partition_by="day")
+    wh.append("m", frame([0, 5], 0.5), partition_by="key")
+    assert wh.snapshots("m")[-1]["partition_by"] is None
+    wh.merge_upsert("m", frame([0, 3, 5], 0.25), ["key"], partition_by="day")
+    entry = wh.snapshots("m")[-1]
+    assert entry["partition_by"] == "day" and sorted(entry["parts"]) == days
+    assert sorted(tuple(r) for r in wh.read("m").collect()) == expected
+
+    wh.overwrite("k", frame(range(6)), partition_by="key")
+    wh.merge_upsert("k", frame([0, 3, 5], 0.25), ["key"], partition_by="day")
+    entry = wh.snapshots("k")[-1]
+    assert entry["partition_by"] == "day" and sorted(entry["parts"]) == days
+    assert sorted(tuple(r) for r in wh.read("k").collect()) == expected
+
+
 def test_read_takes_schema_from_manifest(spark, wh):
     """Reads take the schema the manifest records: no Spark job, an added
     column reads as NULL on older partitions, and a type change fails at
