@@ -849,8 +849,8 @@ def _replay_events(spark, sf_dir, tag, sentinel):
 
 # State-store partitions of every bounded catalog stream, fixed per
 # checkpoint at its first start.  More just multiply tiny checkpoint files per
-# micro-batch: at sf0.001, 16 ran ``stateful_tier`` in 6.0/5.0 s against
-# 3.6/3.3 s for 8, with the same rows.
+# micro-batch: on 4 cores at sf0.01, ``stateful_tier`` took 20.5 s with 16
+# and 11.0 s with 8, with the same rows.
 _STATE_PARTS = 8
 
 
