@@ -30,6 +30,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from streaming_downsampling_spark.pipeline import transcript_pipeline  # noqa: E402
+
 HEADLINE = [
     "rollup_1h",
     "rollup_1d_cascade",
@@ -53,88 +55,6 @@ HEADLINE = [
 ]
 
 
-def transcript_pipeline(spark, sf: float) -> tuple[int, float]:
-    """The north-rule workload: transcripts → signal → 1m/1h/1d tiers →
-    gap-fill → model downsample → compressed chunks.  Returns
-    (n_turns, elapsed_sec).
-
-    All four branches materialize in ONE action (a union of one-row branch
-    summaries): independent stages schedule concurrently, so the job is
-    bounded by compute, not by four sequential job latencies — the shape a
-    real cluster run would use.  The cached input is repartitioned to
-    2×cores first; the synthetic generator writes one parquet file, and
-    without the explicit spread every downstream map stage would inherit its
-    ~3 scan splits regardless of cluster size.
-    """
-    import pyspark.sql.functions as F
-
-    from streaming_downsampling_spark.datagen import transcripts_df
-    from streaming_downsampling_spark.operators._groupmap import (
-        apply_sorted,
-        prepare_sorted,
-    )
-    from streaming_downsampling_spark.operators.compress import (
-        CHUNK_SCHEMA,
-        encode_frame_fn,
-    )
-    from streaming_downsampling_spark.operators.downsample import (
-        MODEL_SCHEMA,
-        model_frame_fn,
-    )
-    from streaming_downsampling_spark.operators.gapfill import gapfill
-    from streaming_downsampling_spark.operators.rollup import (
-        cascade,
-        rollup,
-        with_signal,
-    )
-
-    cores = spark.sparkContext.defaultParallelism
-    df = with_signal(transcripts_df(spark, sf=sf))
-    # prune to the pipeline's columns BEFORE caching: `text` is ~85% of the
-    # bytes and no branch reads it (value = length(text) is materialized) —
-    # caching it would turn every branch's cache scan memory-bandwidth-bound
-    df = df.select("conv_id", "turn_idx", "ts", "value").repartition(2 * cores)
-    df = df.persist()
-    n_turns = df.count()
-    t0 = time.time()
-    r1m = rollup(df, "1m")
-    r1h = cascade(r1m, "1h")
-    r1d = cascade(r1h, "1d")
-    # the model downsampler and the Gorilla encoder group by the SAME
-    # (conv_id, 1-day window): share ONE shuffle+sort (Catalyst does not
-    # reuse the exchange across the two mapInPandas branches on its own —
-    # verified on the executed plan; ~6% off the warm pipeline wall at
-    # sf=100/local[8], interleaved A/B — the saved work is a full-table
-    # shuffle, which grows with SF while the kernels stay compute-bound)
-    prepared = prepare_sorted(
-        df, "1 day", "conv_id", "ts", "value", "turn_idx"
-    ).persist()
-    branches = [
-        r1d.agg(F.sum("n_points").cast("double").alias("v")).select(
-            F.lit("tier_points").alias("phase"), "v"
-        ),
-        gapfill(r1h, "1h", method="linear")
-        .agg(F.count(F.lit(1)).cast("double").alias("v"))
-        .select(F.lit("gapfill_rows").alias("phase"), "v"),
-        apply_sorted(prepared, model_frame_fn(), MODEL_SCHEMA)
-        .agg(F.count(F.lit(1)).cast("double").alias("v"))
-        .select(F.lit("model_windows").alias("phase"), "v"),
-        apply_sorted(prepared, encode_frame_fn(), CHUNK_SCHEMA)
-        .agg(F.sum("enc_bytes").cast("double").alias("v"))
-        .select(F.lit("gorilla_bytes").alias("phase"), "v"),
-    ]
-    summary = branches[0]
-    for b in branches[1:]:
-        summary = summary.unionByName(b)
-    got = {r["phase"]: r["v"] for r in summary.collect()}
-    elapsed = time.time() - t0
-    prepared.unpersist()
-    df.unpersist()
-    assert int(got["tier_points"]) == n_turns, got
-    assert got["model_windows"] > 0 and got["gorilla_bytes"] > 0, got
-    return n_turns, elapsed
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -154,8 +74,8 @@ def main() -> None:
     # external run of this same script; it is NOT the min-of-N floor the
     # round-3 ADVICE flagged — every published number below is a real
     # median measurement.
-    sf_for_warm = max(sf * 200, 1.0)
-    transcript_pipeline(spark, sf_for_warm)
+    tr_sf = max(sf * 200, 1.0)  # transcript SF scaled off the dir SF
+    transcript_pipeline(spark, tr_sf)
 
     # Noise control: this host's run-to-run wall variance is up to ~3x
     # (documented in BENCH.md), so FIVE interleaved passes inside one warm
@@ -167,7 +87,6 @@ def main() -> None:
     # run achieved).  Per-query minima are kept as a secondary noise-floor
     # column only.
     passes = 5
-    tr_sf = max(sf * 200, 1.0)  # transcript SF scaled off the dir SF
 
     # untimed catalog warm-up pass (same steady-state rationale as above)
     for name in HEADLINE:

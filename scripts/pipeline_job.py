@@ -3,28 +3,28 @@
 Submit with the package shipped as --py-files, e.g.:
 
     python scripts/make_pyfiles_zip.py            # -> dist/sds.zip
-    spark-submit --master local[8]  --py-files dist/sds.zip \
-        scripts/pipeline_job.py --sf 20
-    spark-submit --master local[32] --py-files dist/sds.zip \
-        scripts/pipeline_job.py --sf 20
+    spark-submit --master local[1] --py-files dist/sds.zip \
+        scripts/pipeline_job.py --sf 2
+    spark-submit --master local[4] --py-files dist/sds.zip \
+        scripts/pipeline_job.py --sf 2
 
 On a real cluster the master/deploy-mode flags change; nothing in the job
 does.  The job imports ONLY from the shipped package (no repo-root sys.path
-games), proving the zip is self-contained.  Prints one JSON line with
-throughput, suitable for the two-cluster-size scaling comparison.
+games), proving the zip is self-contained.  The job is
+:func:`streaming_downsampling_spark.pipeline.transcript_pipeline`, the same
+one ``bench.py`` times.  Prints one JSON line with throughput, suitable for
+the two-cluster-size scaling comparison.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import time
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", type=float, default=20.0)
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args()
 
     import os
@@ -32,7 +32,7 @@ def main() -> None:
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
 
     # master/cores come from spark-submit; only tune SQL conf here
     b = SparkSession.builder.appName("sds-pipeline")
@@ -41,39 +41,12 @@ def main() -> None:
     b = b.config("spark.sql.session.timeZone", "UTC")
     spark = b.getOrCreate()
     cores = spark.sparkContext.defaultParallelism
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(args.shuffle_partitions or max(cores, 8)),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(max(cores, 8)))
     spark.sparkContext.setLogLevel("ERROR")
 
-    from streaming_downsampling_spark.datagen import transcripts_df
-    from streaming_downsampling_spark.operators.compress import compress_chunks
-    from streaming_downsampling_spark.operators.downsample import downsample_model
-    from streaming_downsampling_spark.operators.gapfill import gapfill
-    from streaming_downsampling_spark.operators.rollup import (
-        cascade,
-        rollup,
-        with_signal,
-    )
+    from streaming_downsampling_spark.pipeline import transcript_pipeline
 
-    df = (
-        with_signal(transcripts_df(spark, sf=args.sf))
-        .select("conv_id", "turn_idx", "ts", "value")
-        .repartition(2 * cores)
-        .persist()
-    )
-    n_turns = df.count()
-    t0 = time.time()
-    r1m = rollup(df, "1m")
-    r1h = cascade(r1m, "1h")
-    r1d = cascade(r1h, "1d")
-    total = r1d.agg(F.sum("n_points")).collect()[0][0]
-    gapfill(r1h, "1h", method="linear").agg(F.count(F.lit(1))).collect()
-    downsample_model(df, window="1 day").agg(F.count(F.lit(1))).collect()
-    compress_chunks(df, window="1 day").agg(F.sum("enc_bytes")).collect()
-    elapsed = time.time() - t0
-    assert total == n_turns, f"tier total {total} != input {n_turns}"
+    n_turns, elapsed = transcript_pipeline(spark, args.sf)
     print(
         json.dumps(
             {

@@ -59,13 +59,19 @@ def prepare_sorted(
     value_col: str,
     order_col: str | None,
 ) -> DataFrame:
-    """The shuffle+sort half of :func:`sorted_group_map`, exposed so several
-    kernels over the SAME (key, window) grouping can share ONE prepared
-    (persisted) DataFrame — e.g. the tier-maintenance job runs the model
-    downsampler and the Gorilla encoder over identical day groups; sharing
-    the exchange halves the dominant shuffle I/O (Catalyst's ReusedExchange
-    does not fire across the two mapInPandas branches — verified on the
-    executed plan)."""
+    """Shuffle and sort ``df`` for :func:`apply_sorted`.
+
+    The prepared frame has columns ``key`` (string), ``window_start``
+    (timestamp), ``_ts``, ``_value`` (double), ``_ord`` (long; a
+    monotonically increasing id when ``order_col`` is None), partitioned by
+    (key, window_start) and sorted by (key, window_start, _ord, _ts).
+
+    Several kernels over the SAME (key, window) grouping can share ONE
+    prepared (persisted) DataFrame — e.g. the transcript pipeline runs the
+    model downsampler and the Gorilla encoder over identical day groups;
+    sharing the exchange halves the dominant shuffle I/O (Catalyst's
+    ReusedExchange does not fire across the two mapInPandas branches —
+    verified on the executed plan)."""
     w = F.window(ts_col, window)
     cols = [
         F.col(key_col).cast("string").alias("key"),
@@ -84,32 +90,6 @@ def prepare_sorted(
         .repartition(_exchange_partitions(df), "key", "window_start")
         .sortWithinPartitions("key", "window_start", "_ord", "_ts")
     )
-
-
-def iter_whole_group_frames(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """The cross-batch group-carry walk, shared by the production kernel
-    and the skew profiler (so the profiler can never measure a diverged
-    copy of this logic): yield frames that contain only WHOLE
-    (key, window_start) groups, carrying each batch's trailing group into
-    the next batch because an Arrow batch boundary may split a group."""
-    carry: pd.DataFrame | None = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-        if not len(pdf):
-            continue
-        lk = pdf["key"].iloc[-1]
-        lw = pdf["window_start"].iloc[-1]
-        tail = (pdf["key"] == lk) & (pdf["window_start"] == lw)
-        carry = pdf[tail]
-        body = pdf[~tail]
-        if len(body):
-            yield body
-    if carry is not None and len(carry):
-        yield carry
 
 
 def apply_sorted(
@@ -133,37 +113,26 @@ def apply_sorted(
         prepared = prepared.select(*cols)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for body in iter_whole_group_frames(batches):
-            out = frame_fn(body)
-            if len(out):
+        # an Arrow batch boundary may split a (key, window_start) group:
+        # carry each batch's trailing group into the next batch, so
+        # frame_fn only ever sees whole groups
+        carry: pd.DataFrame | None = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            elif not len(pdf):
+                continue
+            tail = (pdf["key"] == pdf["key"].iloc[-1]) & (
+                pdf["window_start"] == pdf["window_start"].iloc[-1]
+            )
+            carry = pdf[tail]
+            body = pdf[~tail]
+            if len(body) and len(out := frame_fn(body)):
                 yield out
+        if carry is not None and len(out := frame_fn(carry)):
+            yield out
 
     return prepared.mapInPandas(kernel, schema)
-
-
-def sorted_group_map(
-    df: DataFrame,
-    window: str,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    order_col: str | None,
-    frame_fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema,
-) -> DataFrame:
-    """Run ``frame_fn`` over sorted frames whose rows never split a
-    (key, window) group.
-
-    The prepared frame has columns ``key`` (string), ``window_start``
-    (timestamp), ``_ts``, ``_value`` (double), ``_ord`` (long; == row index
-    fallback when ``order_col`` is None).  ``frame_fn`` receives a frame
-    sorted by (key, window_start, _ord, _ts) containing only whole groups.
-    """
-    return apply_sorted(
-        prepare_sorted(df, window, key_col, ts_col, value_col, order_col),
-        frame_fn,
-        schema,
-    )
 
 
 def group_bounds(body: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

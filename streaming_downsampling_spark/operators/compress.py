@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import gorilla as G
+from ._groupmap import apply_sorted, group_bounds, prepare_sorted
 
 CHUNK_SCHEMA = StructType(
     [
@@ -133,10 +134,10 @@ def compress_chunks(
     order_col: str | None = "turn_idx",
 ) -> DataFrame:
     """Encode each (key, tumbling window) group into one Gorilla chunk row."""
-    from ._groupmap import sorted_group_map
-
-    return sorted_group_map(
-        df, window, key_col, ts_col, value_col, order_col, encode_frame_fn(), CHUNK_SCHEMA
+    return apply_sorted(
+        prepare_sorted(df, window, key_col, ts_col, value_col, order_col),
+        encode_frame_fn(),
+        CHUNK_SCHEMA,
     )
 
 
@@ -150,8 +151,6 @@ def encode_frame_fn():
         bit-packing pass per stream for the whole frame, see
         ``gorilla.encode_timestamps_batched``), no per-group pandas objects
         and no per-group Python beyond the final blob-slice list."""
-        from ._groupmap import group_bounds
-
         bounds, keys, ws = group_bounds(body)
         ts_us = _ts_us(body["_ts"])
         vals = body["_value"].to_numpy(dtype=np.float64)

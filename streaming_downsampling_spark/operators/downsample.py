@@ -2,8 +2,8 @@
 
 Kernels from :mod:`..functions.kernels` run over whole groups as numpy —
 never per-row Python (BASELINE.json input_hint).  The physical shape is the
-shared ``sorted_group_map`` pattern (one shuffle, numpy boundary splits,
-~µs/group) rather than per-group ``applyInPandas`` — see
+shared ``apply_sorted(prepare_sorted(...))`` pattern (one shuffle, numpy
+boundary splits, ~µs/group) rather than per-group ``applyInPandas`` — see
 :mod:`._groupmap` for why this matters at 10^12 turns.
 
 The group is one retention window of one conversation, so group size is
@@ -40,7 +40,7 @@ from pyspark.sql.types import (
 
 from ..functions import kernels as K
 from ..functions import wavelets as wv
-from ._groupmap import group_bounds, sorted_group_map
+from ._groupmap import apply_sorted, group_bounds, prepare_sorted
 
 _SELECTORS: dict[str, Callable[..., np.ndarray]] = {
     "uniform": lambda x, t, **kw: K.uniform_indices(len(x), t),
@@ -153,8 +153,10 @@ def downsample_select(
             }
         )
 
-    return sorted_group_map(
-        df, window, key_col, ts_col, value_col, order_col, frame_fn, SELECT_SCHEMA
+    return apply_sorted(
+        prepare_sorted(df, window, key_col, ts_col, value_col, order_col),
+        frame_fn,
+        SELECT_SCHEMA,
     )
 
 
@@ -221,8 +223,10 @@ def downsample_metrics_multi(
 
     # metrics read only the value series (group_key comes from `key`)
     frame_fn.needed_cols = ["key", "window_start", "_value"]
-    return sorted_group_map(
-        df, window, key_col, ts_col, value_col, order_col, frame_fn, METRICS_SCHEMA
+    return apply_sorted(
+        prepare_sorted(df, window, key_col, ts_col, value_col, order_col),
+        frame_fn,
+        METRICS_SCHEMA,
     )
 
 
@@ -241,13 +245,8 @@ def downsample_model(
     """The reference model pipeline per group: DWT → pooled approximation +
     attention-selected detail coefficients
     (/root/reference/core/downsampling_algorithm2.py:279-339)."""
-    return sorted_group_map(
-        df,
-        window,
-        key_col,
-        ts_col,
-        value_col,
-        order_col,
+    return apply_sorted(
+        prepare_sorted(df, window, key_col, ts_col, value_col, order_col),
         model_frame_fn(wavelet, retention, approx_ds_factor, seed),
         MODEL_SCHEMA,
     )
@@ -369,6 +368,8 @@ def attention_scores(
         return pd.concat(frames, ignore_index=True)
 
     frame_fn.needed_cols = ["key", "window_start", "_value"]
-    return sorted_group_map(
-        df, window, key_col, ts_col, value_col, order_col, frame_fn, ATTN_SCHEMA
+    return apply_sorted(
+        prepare_sorted(df, window, key_col, ts_col, value_col, order_col),
+        frame_fn,
+        ATTN_SCHEMA,
     )

@@ -61,11 +61,14 @@ def _kernel_rows(prep) -> tuple[pd.DataFrame, pd.DataFrame]:
 def test_exchange_one_task_per_core_same_kernel_output(spark, tmp_path):
     """With shuffle.partitions above the core count the exchange gets one
     partition per core; below it, shuffle.partitions.  Model windows and
-    Gorilla chunks are identical under both counts."""
+    Gorilla chunks are identical under both counts, and under 7-row Arrow
+    batches, where most groups straddle a batch boundary and reach the
+    kernels only through apply_sorted's cross-batch carry."""
     from streaming_downsampling_spark.operators._groupmap import prepare_sorted
 
     conf = spark.conf
     old_parts = conf.get("spark.sql.shuffle.partitions")
+    old_batch = conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     df = spark.read.parquet(_turns(tmp_path))
     cores = spark.sparkContext.defaultParallelism
     few = max(1, cores // 2)
@@ -79,16 +82,23 @@ def test_exchange_one_task_per_core_same_kernel_output(spark, tmp_path):
         prep = prepare_sorted(df, "1 day", "conv_id", "ts", "value", "turn_idx")
         assert prep.rdd.getNumPartitions() == few
         model_few, chunks_few = _kernel_rows(prep)
+        conf.set("spark.sql.shuffle.partitions", "16")
+        conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+        prep = prepare_sorted(df, "1 day", "conv_id", "ts", "value", "turn_idx")
+        model_small, chunks_small = _kernel_rows(prep)
     finally:
         conf.set("spark.sql.shuffle.partitions", old_parts)
+        conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_batch)
 
     assert len(model_cores) == 60 * 3 + 2
     assert (model_cores["n"] > 200).sum() == 2
-    assert model_cores[["key", "window_start", "n"]].equals(
-        model_few[["key", "window_start", "n"]]
-    )
-    for col in ("pooled_approx", "detail_values", "detail_indices"):
-        for a, b in zip(model_cores[col], model_few[col]):
-            assert np.array_equal(np.asarray(a), np.asarray(b)), col
-    assert chunks_cores.equals(chunks_few)
+    assert (model_cores["n"] > 7).sum() > len(model_cores) // 2
+    for model, chunks in ((model_few, chunks_few), (model_small, chunks_small)):
+        assert model_cores[["key", "window_start", "n"]].equals(
+            model[["key", "window_start", "n"]]
+        )
+        for col in ("pooled_approx", "detail_values", "detail_indices"):
+            for a, b in zip(model_cores[col], model[col]):
+                assert np.array_equal(np.asarray(a), np.asarray(b)), col
+        assert chunks_cores.equals(chunks)
     assert all(isinstance(b, (bytes, bytearray)) for b in chunks_cores["ts_blob"])
